@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Self-adjudication: single-shot numbers on this sandbox carry large
   * variance (BASELINE.md documents ±20 s across one run; round 7's
   * driver artifact showed 10 queries over 2× anchor that a same-commit
-  * median-of-3 put back under). The bench therefore (a) parses the
-  * per-query anchors out of BASELINE.md, (b) RE-RUNS any query whose
+  * median-of-3 put back under). The bench therefore (a) loads the
+  * per-query anchors from ANCHORS.json, (b) RE-RUNS any query whose
   * measured median exceeds 2× its anchor until it has 3 samples and
   * reports the median of all samples, and (c) emits the queries STILL
   * over 2× anchor under `"flagged"` so a future artifact labels its own
@@ -529,18 +529,13 @@ object Bench {
     if (name.startsWith("sf") && name.length > 2) Some(name.drop(2)) else None
   }
 
-  /** Anchors for the given scale factor. The AUTHORITATIVE store is
-    * ANCHORS.json — an explicit per-query record `{"name": {"sf":
-    * "0.1", "sec": N, "date": "…"}, …}` — because the previous
-    * convention (any backticked `name | number` markdown row in
-    * BASELINE.md parses as an sf0.1 anchor, later tables overriding
-    * earlier) was load-bearing prose: round 9's sf10 table silently
-    * replaced the sf0.1 anchors until de-backticked. Entries whose
-    * `sf` label does not match the requested scale are EXCLUDED (a
-    * BenchSpec case pins this), so a future sf10 anchor table can
-    * never poison the sf0.1 gate again. The markdown parse survives
-    * only as a fallback for trees without the JSON. Missing files →
-    * empty map → no flagging (new deployments still bench). */
+  /** Anchors for the given scale factor, from ANCHORS.json — an explicit
+    * per-query record `{"name": {"sf": "0.1", "sec": N, "date": "…"},
+    * …}`. Entries whose `sf` label does not match the requested scale
+    * are EXCLUDED (a BenchSpec case pins this), so an sf10 anchor can
+    * never poison the sf0.1 gate (round 9's markdown-table anchors
+    * did). `SPARK_GRAFT_ANCHORS` overrides the file's path. Missing
+    * files → empty map → no flagging (new deployments still bench). */
   private[graft] def loadAnchors(sf: String = "0.1"): Map[String, Double] = {
     def read(p: String): Option[String] =
       try {
@@ -549,30 +544,9 @@ object Bench {
           Some(new String(java.nio.file.Files.readAllBytes(path), "UTF-8"))
         else None
       } catch { case _: Throwable => None }
-    // the env override is tried BOTH ways (JSON record, then markdown
-    // table) before any repo fallback: an operator pointing
-    // SPARK_GRAFT_ANCHORS at a markdown baseline must win over the
-    // repo's ANCHORS.json, not be silently ignored because the file
-    // didn't parse as JSON
-    // markdown tables carry NO sf label — by convention they are sf0.1
-    // anchors, so they are consulted only for the sf0.1 gate (this is
-    // exactly the round-9 poisoning class: an sf10 table parsing as
-    // sf0.1 anchors); any other scale factor is JSON-only
-    def fromMd(txt: String): Option[Map[String, Double]] =
-      if (sf == "0.1") Some(parseAnchors(txt)).filter(_.nonEmpty) else None
-    val fromEnv = sys.env.get("SPARK_GRAFT_ANCHORS").flatMap(read).flatMap { txt =>
-      Some(parseAnchorsJson(txt, sf)).filter(_.nonEmpty).orElse(fromMd(txt))
-    }
-    fromEnv.getOrElse {
-      Seq("ANCHORS.json", "/root/repo/ANCHORS.json").iterator
-        .flatMap(p => read(p).map(parseAnchorsJson(_, sf)))
-        .find(_.nonEmpty)
-        .getOrElse {
-          Seq("BASELINE.md", "/root/repo/BASELINE.md").iterator
-            .flatMap(p => read(p).flatMap(fromMd))
-            .find(_.nonEmpty).getOrElse(Map.empty)
-        }
-    }
+    (sys.env.get("SPARK_GRAFT_ANCHORS").toSeq :+ "ANCHORS.json").iterator
+      .flatMap(p => read(p).map(parseAnchorsJson(_, sf)))
+      .find(_.nonEmpty).getOrElse(Map.empty)
   }
 
   /** Parse the ANCHORS.json record, keeping only entries labeled with
@@ -585,16 +559,6 @@ object Bench {
       .filter(_.group(2) == sf)
       .map(m => m.group(1) -> m.group(3).toDouble)
       .toMap
-  }
-
-  private[graft] def parseAnchors(md: String): Map[String, Double] = {
-    // table cells only: a backticked bare identifier immediately
-    // followed by a pipe and a bare number. Prose mentions ("merge_diff
-    // 6.46×") and backticked paths (`/root/...`) never match.
-    val pat = """`([A-Za-z0-9_]+)`\s*\|\s*([0-9]+(?:\.[0-9]+)?)""".r
-    pat.findAllMatchIn(md)
-      .map(m => m.group(1) -> m.group(2).toDouble)
-      .toMap // insertion order: later (newer) tables override
   }
 
   /** Render (full, stdout) JSON lines from per-query results.

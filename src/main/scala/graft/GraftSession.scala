@@ -13,6 +13,11 @@ import org.apache.spark.sql.SparkSession
   *     set it to ~2-3x total cores there.
   *   - Timezone pinned to UTC so timestamp semantics match the DuckDB
   *     oracle and are cluster-invariant.
+  *
+  * This is the ONE place graft sets session conf: readers, the SQL
+  * front end and operators never write `spark.conf`, so a library
+  * user's session keeps the values it was built with. Bench, Verify,
+  * the CLI ([[Args]]) and [[local]] all build through [[configure]].
   */
 object GraftSession {
 
@@ -78,6 +83,10 @@ object GraftSession {
     // only selective for small probe sets anyway (row-group false-hit
     // probability is 1-(1-fpp)^K)
     .config("spark.sql.parquet.pushdown.inFilterThreshold", "100")
+    // parquet TIMESTAMP(NANOS) columns (which Spark otherwise refuses)
+    // read as their raw int64 nanos; callers that need timestamps
+    // convert, as SparkEntry.tbl does for events.ts
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir", defaultWarehouse)
     .config("spark.ui.enabled", "false")
 

@@ -29,6 +29,41 @@ object SparkEntry {
   private def dirTag(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9._-]", "_")
 
+  /** stream_semantic_ingest's sidecar-crossover tracking (round-16
+    * verdict item 8): the one streaming operator whose per-batch cost
+    * grows with corpus size (each bulk batch scans the sketch sidecar
+    * once); the round-11 decision keeps the flat layout until sidecar
+    * bytes ≈ 50× batch bytes, so the gate measures the ratios every run
+    * and the crossover is tracked by artifact data, not memory.
+    *
+    *   - `sidecar_batch_byte_ratio` prices the RETIRED flat layout
+    *     (whole sidecar re-read per batch);
+    *   - the v2 two-store model (r18) prices what a batch actually
+    *     reads: `bands_` — the full skinny (band_hash,id) store on the
+    *     BULK arm (m uniform probe hashes over G row groups hit
+    *     ≈ min(m, G) of them under ANY layout; SketchSidecar doc),
+    *     bloom-pruned row groups on the trickle arm — and `sets_` —
+    *     candidate-pruned past PruneMinStoreBytes, full below it.
+    *
+    * Each ratio is store bytes over the average `base/in` file size,
+    * present only when that store directory exists and the batches
+    * have bytes — a missing store is absent, never a false 0.0. */
+  private[graft] def sidecarByteRatios(fs: org.apache.hadoop.fs.FileSystem,
+      base: String): Map[String, Double] = {
+    val inFiles = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/in"))
+      .filter(_.isFile)
+    val avgBatchB =
+      if (inFiles.isEmpty) 0L else inFiles.map(_.getLen).sum / inFiles.length
+    if (avgBatchB <= 0) return Map.empty
+    Seq("sidecar" -> "sketches", "bands" -> "sketches/bands",
+        "sets" -> "sketches/sets").flatMap { case (name, sub) =>
+      val p = new org.apache.hadoop.fs.Path(s"$base/$sub")
+      if (!fs.exists(p)) None
+      else Some(s"${name}_batch_byte_ratio" ->
+        math.rint(fs.getContentSummary(p).getLength.toDouble / avgBatchB * 100) / 100)
+    }.toMap
+  }
+
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
     // Normalize events.ts to a µs-precision TimestampType regardless of
     // which testdata generation wrote the file:
@@ -2051,57 +2086,16 @@ object SparkEntry {
         corpusPath, s"$base/sketches", "doc_id", "text", cfg,
         exactThreshold = 0.5, checkpointDir = Some(s"$base/ckpt"))
       try q.processAllAvailable() finally q.stop()
-      // sidecar-crossover tracking (round-16 verdict item 8): this is
-      // the one streaming operator whose per-batch cost grows with
-      // corpus size (each bulk batch scans the sketch sidecar once);
-      // the round-11 decision keeps the flat layout until sidecar
-      // bytes ≈ 50× batch bytes. Measure the ratio every run so the
-      // crossover is tracked by artifact data, not memory.
-      locally {
-        def bytesOf(p: String): Long = {
-          val path = new org.apache.hadoop.fs.Path(p)
-          if (!fs.exists(path)) 0L
-          else fs.getContentSummary(path).getLength
-        }
-        val sidecarB = bytesOf(s"$base/sketches")
-        val bandsB = bytesOf(s"$base/sketches/bands")
-        val setsB = bytesOf(s"$base/sketches/sets")
-        val inFiles = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/in"))
-          .filter(_.isFile)
-        val avgBatchB =
-          if (inFiles.isEmpty) 0L else inFiles.map(_.getLen).sum / inFiles.length
-        if (avgBatchB > 0) {
-          val ratio = sidecarB.toDouble / avgBatchB
-          graft.GateMetrics.put("stream_semantic_ingest",
-            "sidecar_batch_byte_ratio", math.rint(ratio * 100) / 100)
-          // v2 two-store cost model (r18): the legacy ratio above
-          // prices the RETIRED flat layout (whole sidecar re-read per
-          // batch). What a v2 batch actually reads from the sidecar:
-          //  - bands: the full skinny (band_hash,id) store on the BULK
-          //    arm only (scan-side pruning is information-theoretically
-          //    out there — m uniform probe hashes over G row groups hit
-          //    ≈ min(m, G) of them under ANY layout, bloom, range or
-          //    directory partition; SketchSidecar doc), bloom-pruned
-          //    row groups on the trickle arm;
-          //  - sets: candidate-pruned past PruneMinStoreBytes, full
-          //    below it (bounded by that threshold by definition).
-          // Track both stores against batch bytes so the crossover
-          // conversation prices the layout that exists.
-          graft.GateMetrics.put("stream_semantic_ingest",
-            "bands_batch_byte_ratio",
-            math.rint(bandsB.toDouble / avgBatchB * 100) / 100)
-          graft.GateMetrics.put("stream_semantic_ingest",
-            "sets_batch_byte_ratio",
-            math.rint(setsB.toDouble / avgBatchB * 100) / 100)
-          val verdict =
-            if (ratio > 50) "legacy flat-layout ratio over 50x (v2 per-batch " +
-              "reads are the bands/sets ratios - see gate_metrics)"
-            else f"under the ~50x crossover (headroom ${50 / math.max(ratio, 1e-9)}%.0fx)"
-          System.err.println(f"[graft] stream_semantic_ingest sidecar/batch " +
-            f"byte ratio: $ratio%.2f (sidecar ${sidecarB / 1024 / 1024} MB, " +
-            f"bands ${bandsB / 1024 / 1024} MB, sets ${setsB / 1024 / 1024} MB, " +
-            f"avg batch ${avgBatchB / 1024 / 1024} MB) - $verdict")
-        }
+      val ratios = sidecarByteRatios(fs, base)
+      ratios.foreach { case (k, v) =>
+        graft.GateMetrics.put("stream_semantic_ingest", k, v) }
+      ratios.get("sidecar_batch_byte_ratio").foreach { ratio =>
+        val verdict =
+          if (ratio > 50) "legacy flat-layout ratio over 50x (v2 per-batch " +
+            "reads are the bands/sets ratios - see gate_metrics)"
+          else f"under the ~50x crossover (headroom ${50 / math.max(ratio, 1e-9)}%.0fx)"
+        System.err.println(f"[graft] stream_semantic_ingest byte ratios " +
+          f"(store/avg batch): ${ratios.toSeq.sorted.mkString(", ")} - $verdict")
       }
       s.read.parquet(corpusPath).select(col("doc_id"), col("text"))
         .orderBy("doc_id")

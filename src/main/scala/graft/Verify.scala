@@ -17,11 +17,9 @@ object Verify {
     val builder0 = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     val builder = sys.env.get("SPARK_GRAFT_JARS").filter(_.nonEmpty)
       .map(builder0.config("spark.jars", _)).getOrElse(builder0)
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.configure(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // reliable-checkpoint arm passthrough (see Bench)
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty).foreach { d =>

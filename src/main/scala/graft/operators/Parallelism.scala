@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -63,8 +64,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * the repartition fires, equally plan-free — the tiny-corpus case.
   * Only the thin band between the bounds (or a plan shape the walk
   * doesn't recognize: joins, existing exchanges, non-file sources,
-  * bucketed/split-disabled relations) falls back to the exact
-  * `df.rdd` probe, preserving the old behavior bit-for-bit there.
+  * bucketed/split-disabled relations, files the format cannot split)
+  * falls back to the exact `df.rdd` probe, preserving the old behavior
+  * bit-for-bit there.
   */
 object Parallelism {
 
@@ -86,18 +88,24 @@ object Parallelism {
 
   /** (lower, upper) bounds on the partition count `df`'s scan will
     * realize, computed from conf + file sizes alone — defined only for
-    * a narrow operator chain over a single splittable
-    * [[HadoopFsRelation]] leaf (the shape every widen() call site
-    * feeds), None otherwise. `spark.sql.files.maxPartitionNum` (a
+    * a narrow operator chain over a single [[HadoopFsRelation]] leaf
+    * whose files the format can all split (the shape every widen() call
+    * site feeds), None otherwise. `spark.sql.files.maxPartitionNum` (a
     * post-pack re-coalesce) and bucketed relations (width = bucket
     * count, not split math) bail to the fallback. */
   private[graft] def scanWidthBounds(df: DataFrame): Option[(Long, Long)] = {
     val conf = df.sparkSession.sessionState.conf
     if (conf.filesMaxPartitionNum.nonEmpty) return None
     leafFsRelation(df.queryExecution.analyzed).map { rel =>
-      val files = rel.location.inputFiles.length.toLong
+      val inputFiles = rel.location.inputFiles
+      val files = inputFiles.length.toLong
       val total = rel.location.sizeInBytes
       if (files == 0L) return Some((0L, 0L))
+      // a file the format cannot split (gzipped CSV/JSON/text) is ONE
+      // partition however large, which the split math below would
+      // count as many — those scans take the exact probe
+      if (!inputFiles.forall(f => rel.fileFormat.isSplitable(
+          df.sparkSession, rel.options, new Path(f)))) return None
       val openCost = conf.filesOpenCostInBytes
       val minParts = conf.filesMinPartitionNum
         .getOrElse(

@@ -479,16 +479,16 @@ object Pq {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
     graft.sources.FsSwap.beginArtifact(fs, new org.apache.hadoop.fs.Path(path))
-    // ONE hash-ordered raw sample feeds BOTH model fits (r18): the
-    // centroid fit's n-row sample is by construction the first n rows
-    // of the codebook fit's larger sample (same md5(id ++ seed) total
-    // order), so sharing the collect changes no value — it drops one
-    // corpus scan + TakeOrdered job per build
+    // ONE hash-ordered raw sample feeds BOTH model fits (r18): each
+    // fit's n-row sample is by construction the first n rows of the
+    // shared larger sample (same md5(id ++ seed) total order), so
+    // sharing the collect changes no value — it drops one corpus scan
+    // + TakeOrdered job per build
     val raw = Similarity.sampleRawVectors(corpus, idCol, vecCol,
       math.max(10000, numCentroids), seed)
     val cents = Similarity.fitCentroids(corpus, idCol, vecCol,
       numCentroids, seed, kmeansIters, rawSample = Some(raw))
-    val model = fitFromSample(raw, m, k, seed, iters)
+    val model = fitFromSample(raw.take(10000), m, k, seed, iters)
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")

@@ -1,16 +1,12 @@
 package graft.sources
 
-import graft.GraftError
-import org.apache.spark.sql.SparkSession
-
 /** CSV delimiter auto-detection (reference S1: data_filter.rs:392-466 —
   * tries the configured delimiter then `, ; | \t :` deduped
   * order-preserving; per candidate a quick structure probe rejects
   * single-column parses).
   *
-  * Scale note: the probe reads only `probeRows` head lines once via the
-  * distributed text reader with an early limit — O(one small task), never
-  * a full-file pass per candidate.
+  * Pure: it works on the head sample [[Readers.read]] fetches once (one
+  * small task), never a file pass per candidate.
   */
 object CsvSniffer {
 
@@ -73,51 +69,21 @@ object CsvSniffer {
     modal > 1
   }
 
-  /** Head lines for the probe / bounded inference. With an `encoding`,
-    * the bytes are decoded with that charset (malformed → U+FFFD) via a
-    * bounded driver-side Hadoop-FS read — `spark.read.textFile` is
-    * UTF-8-only, and probing a Latin-1/UTF-16 file through it would
-    * mangle the very header the schema names come from. */
-  def headLines(spark: SparkSession, path: String, n: Int = ProbeRows,
-      encoding: Option[String] = None): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    encoding match {
-      case None =>
-        spark.read.textFile(path).limit(n).collectAsList().asScala.toSeq
-      case Some(cs) =>
-        val p0 = new org.apache.hadoop.fs.Path(path)
-        val fs = p0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // a dataset path may be a directory of part files — head any one
-        val p =
-          if (fs.getFileStatus(p0).isDirectory)
-            fs.listStatus(p0).iterator.map(_.getPath)
-              .find(q => !q.getName.startsWith("_") && !q.getName.startsWith("."))
-              .getOrElse(p0)
-          else p0
-        val in = fs.open(p)
-        try {
-          val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
-            in, java.nio.charset.Charset.forName(cs)))
-          Iterator.continually(reader.readLine()).takeWhile(_ != null).take(n).toSeq
-        } finally in.close()
-    }
-  }
-
-  /** First candidate that survives the probe. When NONE does, the LAST
-    * candidate is accepted anyway, mirroring the reference's
-    * is_last_element bypass (data_filter.rs:509: the width check is
-    * skipped for the final delimiter) — a single-column CSV, or a header
-    * containing no candidate at all, degrades to a 1-column read instead
-    * of failing. An explicitly configured delimiter wins the fallback
-    * outright — the user's explicit setting must never be vetoed in
-    * favor of a default candidate. GraftError only on an unreadable/
-    * empty file. */
-  def detect(spark: SparkSession, path: String, configured: Option[Char] = None,
-      hasHeader: Boolean = true, encoding: Option[String] = None): Char = {
-    val lines = headLines(spark, path, ProbeRows, encoding)
-    if (lines.isEmpty) throw GraftError.DelimiterNotDetected(path)
+  /** The delimiter for a file whose head is `lines`: the first
+    * candidate (configured, then defaults) that survives [[probe]] on the
+    * first [[ProbeRows]] lines. When NONE does, the LAST candidate is
+    * accepted anyway, mirroring the reference's is_last_element bypass
+    * (data_filter.rs:509: the width check is skipped for the final
+    * delimiter) — a single-column CSV, or a header containing no
+    * candidate at all, degrades to a 1-column read instead of failing.
+    * An explicitly configured delimiter wins the fallback outright — the
+    * user's explicit setting must never be vetoed in favor of a default
+    * candidate. */
+  def sniff(lines: Seq[String], configured: Option[Char] = None,
+      hasHeader: Boolean = true): Char = {
+    val head = lines.take(ProbeRows)
     val candidates = uniqueCandidates(configured)
-    candidates.find(probe(lines, _, hasHeader))
+    candidates.find(probe(head, _, hasHeader))
       .getOrElse(configured.getOrElse(candidates.last))
   }
 }

@@ -75,26 +75,27 @@ object Readers {
     }
   }
 
-  /** S7 dispatch. Returns (frame, detected delimiter for CSV).
-    *
-    * CSV head sampling is SHARED: one small head job feeds both the
-    * delimiter probe and the bounded schema inference (previously each
-    * fetched its own head — two jobs and two file-head reads per open). */
+  /** S7 dispatch by file extension (reference data_filter.rs:257-295). */
   def readAuto(spark: SparkSession, path: String,
       cfg: ReadConfig = ReadConfig()): (DataFrame, Option[Char]) =
-    Format.fromPath(path) match {
+    read(spark, path, Format.fromPath(path), cfg)
+
+  /** The one source read: the app's open ([[readAuto]]) and the SQL
+    * table functions (`read_csv('…')` etc.) both land here. Returns
+    * (frame, detected delimiter for CSV).
+    *
+    * CSV: ONE head job feeds both the delimiter sniff
+    * ([[CsvSniffer.sniff]] on its first `ProbeRows` lines) and the
+    * bounded schema inference. */
+  def read(spark: SparkSession, path: String, format: Format,
+      cfg: ReadConfig): (DataFrame, Option[Char]) =
+    format match {
       case Format.Csv =>
         val headN = math.max(CsvSniffer.ProbeRows,
           math.max(cfg.inferSchemaRows, 1) + (if (cfg.header) 1 else 0))
-        val head = CsvSniffer.headLines(spark, path, headN, probeEncoding(cfg))
+        val head = headLines(spark, path, headN, probeEncoding(cfg))
         if (head.isEmpty) throw GraftError.DelimiterNotDetected(path)
-        val candidates = CsvSniffer.uniqueCandidates(cfg.delimiter)
-        // last-candidate bypass as in CsvSniffer.detect (reference
-        // data_filter.rs:509): an undetectable file degrades to 1 column;
-        // an explicitly configured delimiter wins the fallback
-        val d = candidates
-          .find(CsvSniffer.probe(head.take(CsvSniffer.ProbeRows), _, cfg.header))
-          .getOrElse(cfg.delimiter.getOrElse(candidates.last))
+        val d = CsvSniffer.sniff(head, cfg.delimiter, cfg.header)
         val schema = inferCsvSchemaFromSample(spark, head, d.toString, cfg)
         (csvScan(spark, path, d.toString, schema, cfg), Some(d))
       case Format.Json    => (readJson(spark, path, cfg), None)
@@ -102,6 +103,39 @@ object Readers {
       case Format.Parquet => (readParquet(spark, path), None)
       case Format.Orc     => (readOrc(spark, path), None)
     }
+
+  /** The first `n` lines of `path` (CSV sniff / inference, NDJSON
+    * inference). Without an `encoding` this is a distributed text read
+    * with an early limit — one small job, sampling across the files of
+    * a directory. With one, the bytes are decoded with that charset
+    * (malformed → U+FFFD) via a bounded driver-side Hadoop-FS read of
+    * ONE file — `spark.read.textFile` is UTF-8-only, and probing a
+    * Latin-1/UTF-16 file through it would mangle the very header the
+    * schema names come from. */
+  private[sources] def headLines(spark: SparkSession, path: String, n: Int,
+      encoding: Option[String] = None): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    encoding match {
+      case None =>
+        spark.read.textFile(path).limit(n).collectAsList().asScala.toSeq
+      case Some(cs) =>
+        val p0 = new org.apache.hadoop.fs.Path(path)
+        val fs = p0.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // a dataset path may be a directory of part files — head any one
+        val p =
+          if (fs.getFileStatus(p0).isDirectory)
+            fs.listStatus(p0).iterator.map(_.getPath)
+              .find(q => !q.getName.startsWith("_") && !q.getName.startsWith("."))
+              .getOrElse(p0)
+          else p0
+        val in = fs.open(p)
+        try {
+          val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
+            in, java.nio.charset.Charset.forName(cs)))
+          Iterator.continually(reader.readLine()).takeWhile(_ != null).take(n).toSeq
+        } finally in.close()
+    }
+  }
 
   private def csvReader(spark: SparkSession, sep: String, cfg: ReadConfig) = {
     val r = spark.read
@@ -177,27 +211,10 @@ object Readers {
       .toDS()
   }
 
-  /** S2: CSV with bounded inference + force-string overrides. */
-  def readCsv(spark: SparkSession, path: String, cfg: ReadConfig): DataFrame = {
-    val sep = cfg.delimiter
-      .getOrElse(CsvSniffer.detect(spark, path, None, cfg.header, probeEncoding(cfg))).toString
-    val schema = inferCsvSchema(spark, path, sep, cfg)
-    csvScan(spark, path, sep, schema, cfg)
-  }
-
-  /** Bounded-window CSV schema inference on a head sample (fetched with
-    * cfg.encoding — or lossy UTF-8 in lossy mode — so inferred column
-    * NAMES aren't mangled for non-UTF-8 files), then force-string
-    * overrides applied. */
-  def inferCsvSchema(spark: SparkSession, path: String, sep: String,
-      cfg: ReadConfig): StructType = {
-    val n = math.max(cfg.inferSchemaRows, 1) + (if (cfg.header) 1 else 0)
-    val sample = CsvSniffer.headLines(spark, path, n, probeEncoding(cfg))
-    inferCsvSchemaFromSample(spark, sample, sep, cfg)
-  }
-
-  /** Schema inference over an already-fetched head sample (no extra job
-    * beyond the local-sample parse). */
+  /** S2: bounded-window CSV schema inference over an already-fetched
+    * head sample (fetched with cfg.encoding — or lossy UTF-8 in lossy
+    * mode — so inferred column NAMES aren't mangled for non-UTF-8
+    * files), then force-string overrides applied. */
   def inferCsvSchemaFromSample(spark: SparkSession, sample: Seq[String],
       sep: String, cfg: ReadConfig): StructType = {
     import spark.implicits._
@@ -260,16 +277,15 @@ object Readers {
   def readNdJson(spark: SparkSession, path: String, cfg: ReadConfig): DataFrame = {
     import scala.jdk.CollectionConverters._
     probeEncoding(cfg) // validates the lossy/encoding exclusion
-    // both branches sample ACROSS files: CsvSniffer.headLines heads only
-    // one part file, so a lossy multi-file directory would silently lose
-    // columns present only in non-sampled files — the lossy sample must
-    // see the same multi-file head the scan will
+    // both branches sample ACROSS files (an encoded headLines would head
+    // only one part file, so a lossy multi-file directory would silently
+    // lose columns present only in non-sampled files — the lossy sample
+    // must see the same multi-file head the scan will)
+    val n = math.max(cfg.inferSchemaRows, 1)
     val head =
       if (cfg.lossyUtf8)
-        lossyUtf8Lines(spark, path)
-          .limit(math.max(cfg.inferSchemaRows, 1)).collectAsList().asScala.toSeq
-      else spark.read.textFile(path)
-        .limit(math.max(cfg.inferSchemaRows, 1)).collectAsList().asScala.toSeq
+        lossyUtf8Lines(spark, path).limit(n).collectAsList().asScala.toSeq
+      else headLines(spark, path, n)
     val schema = inferJsonSchema(spark, head, cfg)
     val base = spark.read.option("mode", "PERMISSIVE")
     val reader = schema.fold(base)(base.schema)
@@ -326,12 +342,11 @@ object Readers {
     } finally in.close()
   }
 
-  /** S6: Parquet; tolerates TIMESTAMP(NANOS) columns by reading nanos as
-    * long (caller converts if timestamp semantics are needed). */
-  def readParquet(spark: SparkSession, path: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** S6: Parquet. TIMESTAMP(NANOS) columns read as int64 nanos under the
+    * session policy ([[graft.GraftSession.configure]]); the caller
+    * converts if timestamp semantics are needed. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
-  }
 
   /** ORC (native Spark datasource — vectorized scan, predicate pushdown
     * and column pruning like parquet). */

@@ -1,5 +1,7 @@
 package graft.sql
 
+import graft.sources.{ReadConfig, Readers}
+import graft.sources.Readers.Format
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Entry point for the reference-dialect SQL front end (T4 + Q1–Q20).
@@ -33,22 +35,20 @@ object GraftSql {
   def rewrite(spark: SparkSession, sql: String): String = {
     ensureFunctions(spark)
     // pass 0: file table functions — each distinct (fn, path) becomes a
-    // temp view read through graft's own Readers (sniffing CSV dialect,
-    // bounded inference, ns-timestamp handling), so `FROM
-    // read_csv('x.csv')` gets the same ingest semantics as opening the
-    // file in the app. Registered before pass 1 so star-modifier schema
-    // probes can already resolve the views.
+    // temp view read through the app's own open (Readers.read: sniffed
+    // CSV dialect, bounded inference), so `FROM read_csv('x.csv')` gets
+    // the same ingest semantics as opening the file in the app.
+    // Registered before pass 1 so star-modifier schema probes can
+    // already resolve the views.
     val pass0 = SqlRewriter.substituteTableFns(sql, (fn, path) => {
-      val df = fn match {
-        case "read_parquet" => graft.sources.Readers.readParquet(spark, path)
-        case "read_csv"     => graft.sources.Readers.readCsv(spark, path,
-          graft.sources.ReadConfig())
-        case "read_json"    => graft.sources.Readers.readJson(spark, path,
-          graft.sources.ReadConfig())
-        case "read_ndjson"  => graft.sources.Readers.readNdJson(spark, path,
-          graft.sources.ReadConfig())
+      val format = fn match {
+        case "read_csv"     => Format.Csv
+        case "read_json"    => Format.Json
+        case "read_ndjson"  => Format.NdJson
+        case "read_parquet" => Format.Parquet
         case other          => throw new IllegalArgumentException(s"unknown table fn $other")
       }
+      val (df, _) = Readers.read(spark, path, format, ReadConfig())
       // stable per (fn, path): the same file referenced twice shares one
       // view; the name embeds a sanitized basename for debuggability and
       // a per-JVM sequence number for uniqueness

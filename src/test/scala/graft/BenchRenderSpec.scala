@@ -143,25 +143,6 @@ class BenchRenderSpec extends AnyFunSuite {
     } finally java.util.Locale.setDefault(prev)
   }
 
-  test("parseAnchors reads the real BASELINE.md tables, not prose or paths") {
-    val md =
-      """| `ann_brute_topk` | 2.19 | `ann_ivf_centroid_topk` | 2.99 |
-        || `mm_resize` | 0.18 | stub passthrough on text payloads |
-        || Schema-inference cost bound | 200 rows scanned | `infer_schema_rows` default |
-        |prose mention: merge_diff 6.46x and `q1_agg` ran fast
-        || `t2 correctness` | DuckDB-oracle | `/root/testdata/sf0.01/` (~60k rows) |
-        || `merge_diff` | 1.06 | `corpus_quantiles` | 0.59 |
-        |""".stripMargin
-    val a = Bench.parseAnchors(md)
-    assert(a == Map("ann_brute_topk" -> 2.19, "ann_ivf_centroid_topk" -> 2.99,
-      "mm_resize" -> 0.18, "merge_diff" -> 1.06, "corpus_quantiles" -> 0.59))
-  }
-
-  test("parseAnchors: a later table re-anchor overrides the earlier one") {
-    val a = Bench.parseAnchors("| `q1_agg` | 0.92 |\n| `q1_agg` | 1.50 |")
-    assert(a == Map("q1_agg" -> 1.50))
-  }
-
   test("parseAnchorsJson: sf-labeled records; wrong-scale entries excluded") {
     val json =
       """{
@@ -195,7 +176,6 @@ class BenchRenderSpec extends AnyFunSuite {
     val unknown = a.keySet -- SparkEntry.queries.keySet
     assert(unknown.isEmpty, s"anchors for non-queries: $unknown")
     assert(a.size >= 90, s"expected >=90 anchors, parsed ${a.size}")
-    // and loadAnchors prefers the JSON over the markdown fallback
     assert(Bench.loadAnchors("0.1") == a)
     // round-12: the file also carries sf10 records for the
     // scale-sensitive gates; they resolve at sf "10" and never bleed
@@ -257,17 +237,6 @@ class BenchRenderSpec extends AnyFunSuite {
     val (_, out2) = Bench.render(dnf, "/tmp/sf100", sf100)
     assert((parse(out2) \ "failed").asInstanceOf[JArray].arr.nonEmpty,
       "a DNF dedup_simhash must land in failed")
-  }
-
-  test("the real BASELINE.md parses to anchors covering the bench set") {
-    val p = java.nio.file.Paths.get("BASELINE.md")
-    assume(java.nio.file.Files.isReadable(p))
-    val a = Bench.parseAnchors(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    // every parsed anchor must name a real query — a parse that picks up
-    // stray numbers would silently mis-flag
-    val unknown = a.keySet -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty, s"anchors for non-queries: $unknown")
-    assert(a.size >= 90, s"expected >=90 anchors, parsed ${a.size}")
   }
 
   test("flagged carries queries over 2x anchor with their ratio; others excluded") {

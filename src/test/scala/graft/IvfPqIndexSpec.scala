@@ -184,4 +184,22 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val drifted = graft.operators.Similarity.shouldRebuildIvfIndex(spark, p)
     assert(drifted.shouldRebuild && drifted.appendedFraction > 0.5, drifted.toString)
   }
+
+  test("numCentroids > 10 000: codebooks fit on exactly the 10 000-row prefix") {
+    // axis-aligned vectors: the 10 001 sample centroids collapse to 8
+    // exact directions (ties go to the first index), so the build writes
+    // a handful of cells, while every PQ subvector stays distinct
+    val corpus = (0 until 10050).map { i =>
+      val r = 1.0 + (i % 97) * 0.37 + i * 1e-4
+      val sign = if ((i / 4) % 2 == 0) 1.0 else -1.0
+      (i.toLong, (0 until 4).map(d => if (d == i % 4) sign * r else 0.0))
+    }.toDF("id", "vec")
+    val p = Files.createTempDirectory("graft_ivfpq_prefix").toFile.getAbsolutePath
+    val built = Pq.buildIvfPqIndex(corpus, "id", "vec", p,
+      numCentroids = 10001, m = 2, k = 4, seed = 7L, iters = 1)
+    val prefix = Pq.fit(corpus, "id", "vec", m = 2, k = 4, seed = 7L,
+      iters = 1, sampleSize = 10000)
+    def deep(model: Pq.PqModel) = model.codebooks.map(_.map(_.toSeq).toSeq).toSeq
+    assert(deep(built) == deep(prefix))
+  }
 }

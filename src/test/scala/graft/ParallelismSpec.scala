@@ -89,4 +89,23 @@ class ParallelismSpec extends AnyFunSuite {
     val b = df.orderBy("id").collect().toSeq
     assert(a == b)
   }
+
+  test("an unsplittable gzipped file takes the exact probe and is widened") {
+    val f = new java.io.File(tmpDir("gz"), "docs.ndjson.gz")
+    val out = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(f))
+    try (1 to 2000).foreach(i =>
+      out.write(s"""{"id": $i, "text": "doc $i body"}\n""".getBytes("UTF-8")))
+    finally out.close()
+    // splits this small make the split math claim the scan is provably
+    // wide, but a gzipped file is one partition however it is split
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.files.maxPartitionBytes", "64")
+    s2.conf.set("spark.sql.files.openCostInBytes", "1")
+    val df = s2.read.schema("id LONG, text STRING").json(f.getAbsolutePath)
+      .select(col("id"))
+    assert(df.rdd.getNumPartitions == 1)
+    assert(bounds(df).isEmpty, "no split-math bounds for an unsplittable file")
+    assert(Parallelism.widen(df).rdd.getNumPartitions ==
+      spark.sparkContext.defaultParallelism)
+  }
 }

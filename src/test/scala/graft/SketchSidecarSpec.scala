@@ -350,4 +350,19 @@ class SketchSidecarSpec extends AnyFunSuite {
     assert(e.getMessage.contains("seed"))
   }
 
+  test("stream_semantic_ingest byte ratios: a missing store is absent, never 0.0") {
+    val base = java.nio.file.Files.createTempDirectory("graft_ratio").toFile
+    def put(rel: String, bytes: Int): Unit = {
+      val f = new java.io.File(base, rel)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, Array.fill[Byte](bytes)(1))
+    }
+    put("in/batch0.parquet", 100)
+    put("in/batch1.parquet", 300)
+    put("sketches/sets/part-0.parquet", 400) // no sketches/bands
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    assert(SparkEntry.sidecarByteRatios(fs, base.getAbsolutePath) ==
+      Map("sidecar_batch_byte_ratio" -> 2.0, "sets_batch_byte_ratio" -> 2.0))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources._
+import graft.sql.GraftSql
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,6 +18,10 @@ class SourcesSpec extends AnyFunSuite {
     f.getAbsolutePath
   }
 
+  /** The delimiter the one read path settles on for `p`. */
+  def sniffed(p: String, cfg: ReadConfig = ReadConfig()): Option[Char] =
+    Readers.readAuto(spark, p, cfg)._2
+
   // ---- sniffer ---------------------------------------------------------
 
   test("candidate order: configured first, then defaults, deduped") {
@@ -32,10 +37,11 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("detect picks the delimiter with consistent >1 columns") {
+    assert(CsvSniffer.sniff(Seq("a;b;c", "1;2;3", "4;5;6")) == ';')
     val p = tmpFile("d.csv", "a;b;c\n1;2;3\n4;5;6\n")
-    assert(CsvSniffer.detect(spark, p) == ';')
+    assert(sniffed(p) == Some(';'))
     val p2 = tmpFile("d2.csv", "a\tb\n1\t2\n")
-    assert(CsvSniffer.detect(spark, p2) == '\t')
+    assert(sniffed(p2) == Some('\t'))
   }
 
   test("undelimited content degrades to the last candidate (1-column read)") {
@@ -43,7 +49,7 @@ class SourcesSpec extends AnyFunSuite {
     // delimiter skips the width check, so a single-column file reads as
     // one column instead of failing
     val p = tmpFile("x.csv", "justoneword\nanother\n")
-    assert(CsvSniffer.detect(spark, p) == ':')
+    assert(CsvSniffer.sniff(Seq("justoneword", "another")) == ':')
     val (df, d) = Readers.readAuto(spark, p)
     assert(d.contains(':') && df.columns.length == 1)
     assert(df.count() == 1) // header consumed the first line
@@ -55,9 +61,13 @@ class SourcesSpec extends AnyFunSuite {
     // every candidate — including when it collides with the LAST default
     // (dedup hoists it to the front; the fallback must not then hand the
     // file to a different delimiter)
-    assert(CsvSniffer.detect(spark, p, configured = Some('|')) == '|')
-    assert(CsvSniffer.detect(spark, p, configured = Some(':')) == ':')
-    assert(CsvSniffer.detect(spark, p) == ':') // unconfigured: last candidate
+    val lines = Seq("justoneword", "another")
+    assert(CsvSniffer.sniff(lines, configured = Some('|')) == '|')
+    assert(CsvSniffer.sniff(lines, configured = Some(':')) == ':')
+    assert(CsvSniffer.sniff(lines) == ':') // unconfigured: last candidate
+    // the read path applies the same rule to the file's head
+    assert(sniffed(p, ReadConfig(delimiter = Some('|'))) == Some('|'))
+    assert(sniffed(p) == Some(':'))
   }
 
   // ---- F1: force-string overrides (data_filter.rs:1273-1439) -----------
@@ -71,10 +81,10 @@ class SourcesSpec extends AnyFunSuite {
 
   test("without override the 44-digit id column is lossy; with ^long_id$ it survives") {
     val p = tmpFile("ids.csv", bigIdCsv)
-    val plain = Readers.readCsv(spark, p, ReadConfig(delimiter = Some(';')))
+    val (plain, _) = Readers.readAuto(spark, p, ReadConfig(delimiter = Some(';')))
     assert(plain.schema("long_id").dataType != StringType)  // inferred numeric → lossy
 
-    val forced = Readers.readCsv(spark, p,
+    val (forced, _) = Readers.readAuto(spark, p,
       ReadConfig(delimiter = Some(';'), forceStringRegex = Some("^long_id$")))
     assert(forced.schema("long_id").dataType == StringType)
     val ids = forced.select("long_id").as[String].collect().toSet
@@ -85,7 +95,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("inferSchemaRows = 0 → everything String (reference 0 = no inference)") {
     val p = tmpFile("z.csv", "a,b\n1,2.5\n")
-    val df = Readers.readCsv(spark, p, ReadConfig(inferSchemaRows = 0))
+    val (df, _) = Readers.readAuto(spark, p, ReadConfig(inferSchemaRows = 0))
     assert(df.schema.fields.forall(_.dataType == StringType))
     assert(df.count() == 1)
   }
@@ -94,7 +104,6 @@ class SourcesSpec extends AnyFunSuite {
     // reference rejects only <=1-column parses and reads missing_is_null —
     // the old every-row-must-match-header probe errored on this fixture
     val p = tmpFile("ragged.csv", "a;b;c\n1;2;3\n4;5\n6;7;8\n")
-    assert(CsvSniffer.detect(spark, p) == ';')
     val (df, d) = Readers.readAuto(spark, p)
     assert(d.contains(';'))
     val rows = df.orderBy("a").collect()
@@ -114,11 +123,11 @@ class SourcesSpec extends AnyFunSuite {
 
   test("wrong delimiter splitting only the header is still rejected (modal vote)") {
     // ',' splits the header into 2 fields but no data row: modal count 1
-    // → ',' rejected; every candidate fails, so detect lands on the
+    // → ',' rejected; every candidate fails, so the sniff lands on the
     // last-candidate bypass instead of crowning ','
     val p = tmpFile("hdr.csv", "a,b\n1\n2\n3\n4\n")
     assert(!CsvSniffer.probe(Seq("a,b", "1", "2", "3", "4"), ','))
-    assert(CsvSniffer.detect(spark, p) == ':')
+    assert(sniffed(p) == Some(':'))
   }
 
   test("ISO-8859-1 encoding option decodes Latin-1 bytes the UTF-8 path mangles") {
@@ -128,7 +137,7 @@ class SourcesSpec extends AnyFunSuite {
     val bytes = "name;qty\ncafé;3\n".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
     Files.write(f.toPath, bytes)
     val cfg = ReadConfig(delimiter = Some(';'), encoding = Some("ISO-8859-1"))
-    val out = Readers.readCsv(spark, f.getAbsolutePath, cfg)
+    val out = Readers.readAuto(spark, f.getAbsolutePath, cfg)._1
       .select("name").as[String].collect().toSeq
     assert(out == Seq("café"))
     // header names come from the SAME charset-decoded head sample — an
@@ -136,12 +145,12 @@ class SourcesSpec extends AnyFunSuite {
     val f2 = new java.io.File(dir, "latin1hdr.csv")
     Files.write(f2.toPath,
       "Alíquota;qty\n1.5;3\n".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    val hdr = Readers.readCsv(spark, f2.getAbsolutePath, cfg)
+    val (hdr, _) = Readers.readAuto(spark, f2.getAbsolutePath, cfg)
     assert(hdr.columns.toSeq == Seq("Alíquota", "qty"))
     assert(hdr.select("Alíquota").as[Double].collect().toSeq == Seq(1.5))
     // the default UTF-8 path must NOT produce the correct é — documents
     // the divergence from the reference's LossyUtf8 (data_filter.rs:578)
-    val utf8 = Readers.readCsv(spark, f.getAbsolutePath, ReadConfig(delimiter = Some(';')))
+    val utf8 = Readers.readAuto(spark, f.getAbsolutePath, ReadConfig(delimiter = Some(';')))._1
       .select("name").as[String].collect().toSeq
     assert(utf8 != Seq("café"))
   }
@@ -169,7 +178,7 @@ class SourcesSpec extends AnyFunSuite {
       } else bos.write(s"$i;name_$i;$i\n".getBytes("UTF-8"))
     }
     Files.write(f.toPath, bos.toByteArray)
-    val out = Readers.readCsv(spark, f.getAbsolutePath,
+    val (out, _) = Readers.readAuto(spark, f.getAbsolutePath,
       ReadConfig(delimiter = Some(';'), encoding = Some("ISO-8859-1")))
     val rows = out.select("id", "name", "qty").as[(Int, String, Int)]
       .collect().sortBy(_._1)
@@ -211,7 +220,7 @@ class SourcesSpec extends AnyFunSuite {
     }
     Files.write(f.toPath, bos.toByteArray)
     val cfg = ReadConfig(delimiter = Some(';'), lossyUtf8 = true)
-    val out = Readers.readCsv(spark, f.getAbsolutePath, cfg)
+    val (out, _) = Readers.readAuto(spark, f.getAbsolutePath, cfg)
     val rows = out.select("id", "name", "qty").as[(Int, String, Int)]
       .collect().sortBy(_._1)
     assert(rows.length == 50, "row count must survive malformed bytes")
@@ -228,7 +237,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(auto.filter(col("id") === 25).select("name").as[String].head() == "caf�x")
     // lossy + explicit encoding is contradictory — fail loudly
     intercept[IllegalArgumentException] {
-      Readers.readCsv(spark, f.getAbsolutePath,
+      Readers.readAuto(spark, f.getAbsolutePath,
         ReadConfig(delimiter = Some(';'), lossyUtf8 = true, encoding = Some("ISO-8859-1")))
     }
     // malformed bytes in the HEADER get the same substitution (schema
@@ -238,7 +247,7 @@ class SourcesSpec extends AnyFunSuite {
     b2.write("na".getBytes("UTF-8")); b2.write(Array[Byte](0xFF.toByte))
     b2.write("me;qty\nx;1\n".getBytes("UTF-8"))
     Files.write(f2.toPath, b2.toByteArray)
-    val hdr = Readers.readCsv(spark, f2.getAbsolutePath, cfg)
+    val (hdr, _) = Readers.readAuto(spark, f2.getAbsolutePath, cfg)
     assert(hdr.columns.toSeq == Seq("na�me", "qty"))
     // NDJSON rides the same line source: a malformed byte inside a JSON
     // string costs one U+FFFD, not a PERMISSIVE-nulled row
@@ -253,7 +262,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(nd.toSeq == Seq((1L, "ok"), (2L, "ca�f")))
     // lossy DIRECTORY input: schema inference must sample across part
     // files like the non-lossy path — a column present only in the
-    // second file used to vanish (headLines heads one file only)
+    // second file used to vanish (an encoded head read heads one file only)
     val ndDir = new java.io.File(dir, "nd_multi"); ndDir.mkdir()
     Files.write(new java.io.File(ndDir, "part-0.ndjson").toPath,
       "{\"id\": 1}\n".getBytes("UTF-8"))
@@ -276,9 +285,9 @@ class SourcesSpec extends AnyFunSuite {
     val f4 = new java.io.File(dir, "hdrdup.csv")
     Files.write(f4.toPath,
       "a;b\n1;2\na;b\n3;4\n".getBytes("UTF-8"))
-    val dup = Readers.readCsv(spark, f4.getAbsolutePath,
+    val dup = Readers.readAuto(spark, f4.getAbsolutePath,
       ReadConfig(delimiter = Some(';'), lossyUtf8 = true,
-        forceStringRegex = Some("*")))
+        forceStringRegex = Some("*")))._1
       .as[(String, String)].collect().toSeq
     assert(dup.length == 3, s"header-equal data row lost: $dup")
     assert(dup.contains(("a", "b")), s"header-equal data row lost: $dup")
@@ -335,7 +344,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("quoted ints and bools infer through quotes") {
     val p = tmpFile("q.csv", "foo,bar,baz\n1,\"4\",\"false\"\n3,\"5\",\"false\"\n5,\"6\",\"true\"\n")
-    val df = Readers.readCsv(spark, p, ReadConfig())
+    val (df, _) = Readers.readAuto(spark, p)
     assert(df.schema("foo").dataType == IntegerType)
     assert(df.schema("bar").dataType == IntegerType)
     assert(df.schema("baz").dataType == BooleanType)
@@ -402,5 +411,44 @@ class SourcesSpec extends AnyFunSuite {
     Writers.saveAs(df.limit(1), s"$base/out.csv", delimiter = ';', singleFile = true)
     val (again, _) = Readers.readAuto(spark, s"$base/out.csv", ReadConfig(delimiter = Some(';')))
     assert(again.count() == 1)
+  }
+
+  // ---- one read path, session policy in GraftSession ------------------
+
+  test("parquet TIMESTAMP(NANOS) reads as int64 nanos under the GraftSession policy") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val path = Files.createTempDirectory("graft_nanos").toFile.getAbsolutePath +
+      "/ts.parquet"
+    val nanos = Seq(1704067200123456789L, -1L)
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path))
+      .withType(schema).build()
+    try {
+      val groups = new SimpleGroupFactory(schema)
+      nanos.foreach(n => w.write(groups.newGroup().append("ts", n)))
+    } finally w.close()
+    // a fresh session of the GraftSession-built context: no earlier read
+    // can have set the conf for it
+    val (df, _) = Readers.readAuto(spark.newSession(), path)
+    assert(df.schema("ts").dataType == LongType)
+    assert(df.as[Long].collect().sorted.toSeq == nanos.sorted)
+  }
+
+  test("reads and SQL table functions leave the session conf untouched") {
+    val dir = Files.createTempDirectory("graft_conf").toFile.getAbsolutePath
+    val csv = tmpFile("c.csv", "k;v\n1;a\n2;b\n")
+    val pq = s"$dir/t.parquet"
+    Seq((1L, "x"), (2L, "y")).toDF("k", "s").write.parquet(pq)
+    val s2 = spark.newSession()
+    val before = s2.conf.getAll
+    Readers.readAuto(s2, csv)._1.count()
+    Readers.readAuto(s2, pq)._1.count()
+    val joined = GraftSql.run(s2,
+      s"SELECT c.v, p.s FROM read_csv('$csv') c JOIN read_parquet('$pq') p ON c.k = p.k")
+    assert(joined.count() == 2)
+    assert(s2.conf.getAll == before)
   }
 }
