@@ -108,35 +108,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // default 32 = the sandbox-tuned reduce width for sf0.1; scale
-    // probes override it (SPARK_GRAFT_SHUFFLE_PARTITIONS) the way a
-    // cluster would — per-task shuffle share shrinks with width, and a
-    // gate whose sf100 ratio inflates only at width 32 is spilling,
-    // not superlinear
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    // SPARK_GRAFT_MASTER=local-cluster[2,16,8192] — the distributed-ish
-    // probe mode (verdict r16 item 1): separate executor JVMs, real
-    // serialized closures, cross-process shuffle and broadcast. Needs
-    // the engine classes as a jar executors can load —
-    // SPARK_GRAFT_JARS points at `sbt package` output.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-    val builder = sys.env.get("SPARK_GRAFT_JARS").filter(_.nonEmpty)
-      .map(builder0.config("spark.jars", _)).getOrElse(builder0)
-    val spark = GraftSession.configure(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CHECKPOINT_DIR: run every Materialize.once site on
-    // the RELIABLE checkpoint arm (the cluster-grade mode — survives
-    // executor loss) instead of localCheckpoint. Exercised under
-    // local-cluster to measure the arm's cost delta on real gates.
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty).foreach { d =>
-      spark.conf.set(Materialize.DirKey, d)
-      System.err.println(s"[bench] reliable checkpoints -> $d")
-    }
+    // reduce width 32 is sandbox-tuned for sf0.1; scale probes widen it
+    // as a cluster would (a gate whose sf100 ratio inflates only at
+    // width 32 is spilling, not superlinear)
+    val spark = GraftSession.fromEnv("bench", defaultCpus = 32, shufflePartitions =
+      Some(sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")))
 
     // JVM/codegen warmup so the first measured query isn't charged for it
     SparkEntry.queries("q1_agg")(spark, sfDir).write.format("noop")
@@ -396,8 +372,10 @@ object Bench {
     * effect is small — a same-day A/B read 4.7–6.5 s across
     * {32,128}×{8g,48g} with no monotone width effect — but a control
     * that varies with the protocol under measure is wrong by
-    * construction, so it is pinned. NB the round-17 sf100 sweep's
-    * 10.7 s (factor 3.23) reading was neither width nor heap: it was
+    * construction, so it is pinned — on a [[GraftSession.withConf]]
+    * clone, leaving the caller's session as it was. NB the round-17
+    * sf100 sweep's 10.7 s (factor 3.23) reading was neither width nor
+    * heap: it was
     * writeback debt from a 15 GB data-generation job that finished
     * minutes earlier (same box read 1.2–2.0 once drained) — the same
     * first-probe hazard the disk control's best-of-2 exists for.
@@ -405,17 +383,13 @@ object Bench {
     * control of a run. */
   private[graft] def runControl(spark: SparkSession,
       rows: Long = 30L * 1000 * 1000): Double = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "32")
-    try {
-      val t0 = System.nanoTime()
-      spark.range(0L, rows, 1L, 32)
-        .selectExpr("pmod(xxhash64(id), 6000000) AS k", "id AS v")
-        .groupBy("k").sum("v")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    } finally prev.foreach(spark.conf.set(key, _))
+    val t0 = System.nanoTime()
+    GraftSession.withConf(spark.range(0L, rows, 1L, 32).toDF(),
+        "spark.sql.shuffle.partitions" -> "32")
+      .selectExpr("pmod(xxhash64(id), 6000000) AS k", "id AS v")
+      .groupBy("k").sum("v")
+      .write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** The directory Spark's shuffle files actually land in:

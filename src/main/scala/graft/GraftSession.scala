@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Session bootstrap tuned for the graft engine.
   *
@@ -14,10 +15,15 @@ import org.apache.spark.sql.SparkSession
   *   - Timezone pinned to UTC so timestamp semantics match the DuckDB
   *     oracle and are cluster-invariant.
   *
-  * This is the ONE place graft sets session conf: readers, the SQL
-  * front end and operators never write `spark.conf`, so a library
-  * user's session keeps the values it was built with. Bench, Verify,
-  * the CLI ([[Args]]) and [[local]] all build through [[configure]].
+  * This is the ONE place graft sets session conf. Build-time policy
+  * lives in [[configure]]: Bench and Verify ([[fromEnv]]), the CLI
+  * ([[Args]]) and [[local]] all build through it. A setting one plan
+  * needs (AQE off for one argmax, a forced salt floor, a pinned shuffle
+  * width) goes only through [[withConf]], which applies it to a clone
+  * of the session. Apart from SparkEntry.tbl's nanosAsLong hook for
+  * sessions handed to SparkEntry.entry, nothing writes a live session's
+  * `spark.conf`, so a library user's session — and every query running
+  * on it — keeps the values it was built with.
   */
 object GraftSession {
 
@@ -89,6 +95,41 @@ object GraftSession {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir", defaultWarehouse)
     .config("spark.ui.enabled", "false")
+
+  /** `df`'s analyzed plan re-hosted on a clone of its session, with
+    * `settings` applied to the clone only: frames derived from the
+    * result optimize, plan and execute under them, while the session
+    * and every query on it keep their values. The clone copies the
+    * runtime conf, temp views and functions and shares the
+    * SparkContext and the cache. */
+  def withConf(df: DataFrame, settings: (String, String)*): DataFrame = {
+    val clone = SessionBridge.cloneSession(df.sparkSession)
+    settings.foreach { case (k, v) => clone.conf.set(k, v) }
+    SessionBridge.ofRows(clone, df.queryExecution.analyzed)
+  }
+
+  /** Bench's and Verify's session: `local[SPARK_GRAFT_CPUS]` (default
+    * `defaultCpus`) unless `SPARK_GRAFT_MASTER` names another master
+    * (e.g. `local-cluster[2,16,8192]`: separate executor JVMs, with
+    * `SPARK_GRAFT_JARS` pointing at `sbt package` output);
+    * `SPARK_GRAFT_CHECKPOINT_DIR` puts every [[Materialize.once]] site
+    * on the reliable checkpoint arm. The shuffle width defaults to the
+    * CPU count. */
+  def fromEnv(tag: String, defaultCpus: Int,
+      shufflePartitions: Option[String]): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val b = SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(cpus))
+    sys.env.get("SPARK_GRAFT_JARS").filter(_.nonEmpty).foreach(b.config("spark.jars", _))
+    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty).foreach { d =>
+      b.config(Materialize.DirKey, d)
+      System.err.println(s"[$tag] reliable checkpoints -> $d")
+    }
+    val spark = configure(b).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Local session for tests / CLI use. */
   def local(threads: Int = 4, shufflePartitions: Int = 32): SparkSession = {

@@ -584,22 +584,14 @@ object SparkEntry {
       // at default floor (5792) no sf0.1 bucket ever trips, leaving the
       // salted plan unit-test-only. Output must be value-exact against
       // the SAME all-pairs oracle as dedup_minhash: salting may never
-      // change results, only task shape. The conf is read at plan
-      // construction (the eager probe), so the finally-restore cannot
-      // race the execution.
-      val prev = s.conf.getOption(Dedup.SaltFloorKey)
-      s.conf.set(Dedup.SaltFloorKey, "1")
-      try {
-        Dedup.minhashExactPairs(tbl(s, dir, "documents"), "doc_id", "text",
+      // change results, only task shape. The floor rides on the
+      // documents frame (withConf), so only this gate's plan sees it.
+      Dedup.minhashExactPairs(
+          GraftSession.withConf(tbl(s, dir, "documents"), Dedup.SaltFloorKey -> "1"),
+          "doc_id", "text",
           Dedup.MinHashConfig(numHashes = 128, bands = 64), exactThreshold = 0.5)
-          .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-          .orderBy("id_a", "id_b")
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(Dedup.SaltFloorKey, v)
-          case None => s.conf.unset(Dedup.SaltFloorKey)
-        }
-      }
+        .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+        .orderBy("id_a", "id_b")
     }),
 
     "dedup_simhash" -> ((s, dir) => {

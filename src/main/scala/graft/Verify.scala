@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER / SPARK_GRAFT_JARS: the local-cluster probe
-    // mode (see Bench) — correctness under separate executor JVMs
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-    val builder = sys.env.get("SPARK_GRAFT_JARS").filter(_.nonEmpty)
-      .map(builder0.config("spark.jars", _)).getOrElse(builder0)
-    val spark = GraftSession.configure(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // reliable-checkpoint arm passthrough (see Bench)
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty).foreach { d =>
-      spark.conf.set(Materialize.DirKey, d)
-      System.err.println(s"[verify] reliable checkpoints -> $d")
-    }
+    val spark = GraftSession.fromEnv("verify", defaultCpus = 4,
+      shufflePartitions = None)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -5,7 +5,7 @@ import java.util.regex.{Matcher, Pattern}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Materialize
+import graft.{GraftSession, Materialize}
 
 /** Byte-pair-encoding vocabulary induction (Sennrich et al. 2016) —
   * tokenizer TRAINING as a distributed operator. The classic algorithm
@@ -93,7 +93,6 @@ object Bpe {
   def trainBpeMerges(docs: DataFrame, textCol: String,
       numMerges: Int): Seq[(Int, String, String, Long)] = {
     require(numMerges >= 1, s"numMerges must be >= 1 (got $numMerges)")
-    val spark = docs.sparkSession
     var w = Materialize.once(wordTypes(docs, textCol), eager = true)
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     // AQE OFF for DEPTH-0 rounds only (r18, guide §1.2 step 3 applied
@@ -109,52 +108,45 @@ object Bpe {
     // free: an all-rounds AQE-off measured 26.1 s vs 16.8-18.5 s
     // same-box solo at sf100 (the uncoalesced full-width chained
     // aggregates cost more than the saved round-trips), so chained
-    // rounds keep AQE. Values are unaffected either way (same plan
-    // modulo AQE wrappers); the conf is restored even on failure.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = spark.conf.getOption(aqeKey)
-    def restoreAqe(): Unit = aqePrev match {
-      case Some(v) => spark.conf.set(aqeKey, v)
-      case None => spark.conf.unset(aqeKey)
-    }
-    try {
-      var r = 1
-      var exhausted = false
-      var depth0 = true // round 1 reads the eager wordTypes checkpoint
-      while (r <= numMerges && !exhausted) {
-        if (depth0) spark.conf.set(aqeKey, "false") else restoreAqe()
-        // explode_OUTER (same rationale as wordTypes): the inner form's
-        // inferred filter re-inlines adjacentPairs — and, on rounds where
-        // w is an unmaterialized merge chain, the whole regexp_replace
-        // chain — into a per-row filter below the projection
-        val best = w.select(explode_outer(adjacentPairs(col("word"))).as("pr"), col("freq"))
-          .where(col("pr").isNotNull)
-          .groupBy("pr").agg(sum("freq").as("cnt"))
-          .orderBy(col("cnt").desc, col("pr")).limit(1)
-          .collect() // exactly one row per round, numMerges rounds — bounded
-        if (best.isEmpty) exhausted = true
-        else {
-          val pair = best(0).getString(0)
-          val cnt = best(0).getLong(1)
-          val merged = pair.replace(" ", "")
-          merges += ((r, pair, merged, cnt))
-          val next = w
-            .select(applyMergeCol(col("word"), pair, merged).as("word"), col("freq"))
-            .groupBy("word").agg(sum("freq").as("freq"))
-          if (r % RematerializeEvery == 0) {
-            // the re-materialize job itself is a single chained DAG —
-            // run it (and the next round) with AQE restored
-            restoreAqe()
-            w = Materialize.once(next, eager = true)
-            depth0 = true
-          } else {
-            w = next
-            depth0 = false
-          }
-          r += 1
+    // rounds — and the re-materialize jobs — keep AQE. Values are
+    // unaffected either way (same plan modulo AQE wrappers). The
+    // setting applies to the depth-0 argmax plan only (withConf), never
+    // to the session other queries share.
+    var r = 1
+    var exhausted = false
+    var depth0 = true // round 1 reads the eager wordTypes checkpoint
+    while (r <= numMerges && !exhausted) {
+      val src =
+        if (depth0) GraftSession.withConf(w, "spark.sql.adaptive.enabled" -> "false")
+        else w
+      // explode_OUTER (same rationale as wordTypes): the inner form's
+      // inferred filter re-inlines adjacentPairs — and, on rounds where
+      // w is an unmaterialized merge chain, the whole regexp_replace
+      // chain — into a per-row filter below the projection
+      val best = src.select(explode_outer(adjacentPairs(col("word"))).as("pr"), col("freq"))
+        .where(col("pr").isNotNull)
+        .groupBy("pr").agg(sum("freq").as("cnt"))
+        .orderBy(col("cnt").desc, col("pr")).limit(1)
+        .collect() // exactly one row per round, numMerges rounds — bounded
+      if (best.isEmpty) exhausted = true
+      else {
+        val pair = best(0).getString(0)
+        val cnt = best(0).getLong(1)
+        val merged = pair.replace(" ", "")
+        merges += ((r, pair, merged, cnt))
+        val next = w
+          .select(applyMergeCol(col("word"), pair, merged).as("word"), col("freq"))
+          .groupBy("word").agg(sum("freq").as("freq"))
+        if (r % RematerializeEvery == 0) {
+          w = Materialize.once(next, eager = true)
+          depth0 = true
+        } else {
+          w = next
+          depth0 = false
         }
+        r += 1
       }
-    } finally restoreAqe()
+    }
     merges.result()
   }
 

@@ -468,15 +468,12 @@ class BenchRenderSpec extends AnyFunSuite {
     // the control must read the BOX, not the protocol: a control that
     // inherits the sweep's shuffle-partition conf varies with the
     // protocol under measure (round 17)
-    val spark = SparkTestSession.spark
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "7")
-    try {
-      val sec = Bench.runControl(spark, rows = 1000L)
-      assert(sec > 0)
-      assert(spark.conf.get(key) == "7",
-        "control must restore the caller's shuffle-partition conf")
-    } finally spark.conf.set(key, prev)
+    val spark = GraftSession.withConf(SparkTestSession.spark.emptyDataFrame, key -> "7")
+      .sparkSession
+    val sec = Bench.runControl(spark, rows = 1000L)
+    assert(sec > 0)
+    assert(spark.conf.get(key) == "7",
+      "control must leave the caller's shuffle-partition conf as it was")
   }
 }

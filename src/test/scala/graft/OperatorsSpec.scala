@@ -9,6 +9,10 @@ class OperatorsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** `df` re-hosted with the ngram route's spill budget set to `bytes`. */
+  private def budgeted(df: org.apache.spark.sql.DataFrame, bytes: Long) =
+    GraftSession.withConf(df, Dedup.NgramSpillBudgetKey -> bytes.toString)
+
   // ---- sort (O1 + 5-state cycle, sort.rs:39-61) ------------------------
 
   test("5-state cycle: NotSorted → DescNF → AscNF → DescNL → AscNL → NotSorted") {
@@ -1262,47 +1266,47 @@ class OperatorsSpec extends AnyFunSuite {
       else (i.toLong, (0 until 30).map(j => s"a${i}_$j").mkString(" "))
     }.toDF("doc_id", "text")
     val expected = (n / 2).toLong * (n / 2 - 1) / 2
-    spark.conf.set(Dedup.SaltFloorKey, "100")
-    try {
-      val auto = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
-      assert(auto.count() == expected, "auto salting must not lose or duplicate pairs")
-      val unsalted = Dedup.simhashPairs(docs, "doc_id", "text",
-        maxHamming = 3, saltBuckets = 1)
-      assert(auto.exceptAll(unsalted).count() == 0 &&
-        unsalted.exceptAll(auto).count() == 0,
-        "auto-salted and unsalted pair sets must be identical")
-      // spread proof: reconstruct cells with the g Auto must have chosen
-      val g = Dedup.resolveSaltBuckets(n / 2, floor = 100)
-      assert(g == 4)
-      val perCell = auto
-        .withColumn("ca", least(pmod(xxhash64(col("id_a")), lit(g.toLong)),
-          pmod(xxhash64(col("id_b")), lit(g.toLong))))
-        .withColumn("cb", greatest(pmod(xxhash64(col("id_a")), lit(g.toLong)),
-          pmod(xxhash64(col("id_b")), lit(g.toLong))))
-        .groupBy("ca", "cb").count().select("count").as[Long].collect()
-      assert(perCell.length == g * (g + 1) / 2,
-        s"expected ${g * (g + 1) / 2} occupied triangle cells, got ${perCell.length}")
-      assert(perCell.max <= 2L * ((n / 2 / g) * (n / 2 / g)),
-        s"hot cell ${perCell.max} pairs — auto salting failed to spread")
-      // MinHash LSH shares the generator (identical docs collide in
-      // EVERY band): all C(400,2) identical pairs must survive Auto
-      // salting exactly once
-      val mh = Dedup.minhashPairs(docs, "doc_id", "text")
-        .filter(col("est_jaccard") === 1.0)
-      assert(mh.count() == expected,
-        "minhash auto-salted candidates must cover every identical pair once")
-      // embedding path shares the generator: same equality guarantee
-      val vecs = (0 until 400).map { i =>
-        if (i < 200) (i.toLong, Array(1.0f, 0.0f, 0.0f, 0.0f))
-        else (i.toLong, Array.tabulate(4)(d => math.sin(i * 4 + d).toFloat))
-      }.toDF("vec_id", "embedding")
-      val ea = Dedup.embeddingNearDupPairs(vecs, "vec_id", "embedding",
-        threshold = 0.99, signBits = 4, dim = 4).select("id_a", "id_b")
-      val e1 = Dedup.embeddingNearDupPairs(vecs, "vec_id", "embedding",
-        threshold = 0.99, signBits = 4, dim = 4, saltBuckets = 1).select("id_a", "id_b")
-      assert(ea.exceptAll(e1).count() == 0 && e1.exceptAll(ea).count() == 0,
-        "embedding auto/unsalted pair sets must match")
-    } finally spark.conf.unset(Dedup.SaltFloorKey)
+    def floored(df: org.apache.spark.sql.DataFrame) =
+      GraftSession.withConf(df, Dedup.SaltFloorKey -> "100")
+    val salted = floored(docs)
+    val auto = Dedup.simhashPairs(salted, "doc_id", "text", maxHamming = 3)
+    assert(auto.count() == expected, "auto salting must not lose or duplicate pairs")
+    val unsalted = Dedup.simhashPairs(salted, "doc_id", "text",
+      maxHamming = 3, saltBuckets = 1)
+    assert(auto.exceptAll(unsalted).count() == 0 &&
+      unsalted.exceptAll(auto).count() == 0,
+      "auto-salted and unsalted pair sets must be identical")
+    // spread proof: reconstruct cells with the g Auto must have chosen
+    val g = Dedup.resolveSaltBuckets(n / 2, floor = 100)
+    assert(g == 4)
+    val perCell = auto
+      .withColumn("ca", least(pmod(xxhash64(col("id_a")), lit(g.toLong)),
+        pmod(xxhash64(col("id_b")), lit(g.toLong))))
+      .withColumn("cb", greatest(pmod(xxhash64(col("id_a")), lit(g.toLong)),
+        pmod(xxhash64(col("id_b")), lit(g.toLong))))
+      .groupBy("ca", "cb").count().select("count").as[Long].collect()
+    assert(perCell.length == g * (g + 1) / 2,
+      s"expected ${g * (g + 1) / 2} occupied triangle cells, got ${perCell.length}")
+    assert(perCell.max <= 2L * ((n / 2 / g) * (n / 2 / g)),
+      s"hot cell ${perCell.max} pairs — auto salting failed to spread")
+    // MinHash LSH shares the generator (identical docs collide in
+    // EVERY band): all C(400,2) identical pairs must survive Auto
+    // salting exactly once
+    val mh = Dedup.minhashPairs(salted, "doc_id", "text")
+      .filter(col("est_jaccard") === 1.0)
+    assert(mh.count() == expected,
+      "minhash auto-salted candidates must cover every identical pair once")
+    // embedding path shares the generator: same equality guarantee
+    val vecs = floored((0 until 400).map { i =>
+      if (i < 200) (i.toLong, Array(1.0f, 0.0f, 0.0f, 0.0f))
+      else (i.toLong, Array.tabulate(4)(d => math.sin(i * 4 + d).toFloat))
+    }.toDF("vec_id", "embedding"))
+    val ea = Dedup.embeddingNearDupPairs(vecs, "vec_id", "embedding",
+      threshold = 0.99, signBits = 4, dim = 4).select("id_a", "id_b")
+    val e1 = Dedup.embeddingNearDupPairs(vecs, "vec_id", "embedding",
+      threshold = 0.99, signBits = 4, dim = 4, saltBuckets = 1).select("id_a", "id_b")
+    assert(ea.exceptAll(e1).count() == 0 && e1.exceptAll(ea).count() == 0,
+      "embedding auto/unsalted pair sets must match")
   }
 
   test("Auto salting: over-cap hot set stays distributed (no task-closure LocalRelation)") {
@@ -1317,29 +1321,26 @@ class OperatorsSpec extends AnyFunSuite {
       else (i.toLong, (0 until 30).map(j => s"u${i}_$j").mkString(" "))
     }.toDF("doc_id", "text")
     val expected = (n / 2).toLong * (n / 2 - 1) / 2
-    spark.conf.set(Dedup.SaltFloorKey, "100")
-    try {
-      def planOf(df: org.apache.spark.sql.DataFrame): String =
-        df.queryExecution.executedPlan.toString
-      val local = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
-      assert(planOf(local).contains("LocalTableScan"),
-        "under-cap hot set should ride the zero-recompute LocalRelation")
-      spark.conf.set(Dedup.LocalHotCapKey, "0")
-      val dist = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
-      val distPlan = planOf(dist)
-      assert(!distPlan.contains("LocalTableScan"),
-        "over-cap hot set must NOT be re-emitted as a LocalRelation")
-      assert(distPlan.contains("BroadcastExchange") ||
-        distPlan.contains("BroadcastHashJoin"),
-        "over-cap hot frame must still ship via a broadcast exchange")
-      assert(dist.count() == expected && local.count() == expected,
-        "both routes must emit every identical pair exactly once")
-      assert(dist.exceptAll(local).count() == 0 && local.exceptAll(dist).count() == 0,
-        "distributed-hot and local-hot pair sets must be identical")
-    } finally {
-      spark.conf.unset(Dedup.SaltFloorKey)
-      spark.conf.unset(Dedup.LocalHotCapKey)
-    }
+    def planOf(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString
+    val local = Dedup.simhashPairs(
+      GraftSession.withConf(docs, Dedup.SaltFloorKey -> "100"),
+      "doc_id", "text", maxHamming = 3)
+    assert(planOf(local).contains("LocalTableScan"),
+      "under-cap hot set should ride the zero-recompute LocalRelation")
+    val dist = Dedup.simhashPairs(
+      GraftSession.withConf(docs, Dedup.SaltFloorKey -> "100", Dedup.LocalHotCapKey -> "0"),
+      "doc_id", "text", maxHamming = 3)
+    val distPlan = planOf(dist)
+    assert(!distPlan.contains("LocalTableScan"),
+      "over-cap hot set must NOT be re-emitted as a LocalRelation")
+    assert(distPlan.contains("BroadcastExchange") ||
+      distPlan.contains("BroadcastHashJoin"),
+      "over-cap hot frame must still ship via a broadcast exchange")
+    assert(dist.count() == expected && local.count() == expected,
+      "both routes must emit every identical pair exactly once")
+    assert(dist.exceptAll(local).count() == 0 && local.exceptAll(dist).count() == 0,
+      "distributed-hot and local-hot pair sets must be identical")
   }
 
   test("ngramJaccard sampled-shingle opt-in: identical pairs stay exact, high recall vs exact") {
@@ -1403,9 +1404,8 @@ class OperatorsSpec extends AnyFunSuite {
       Dedup.NgramSpillBudgetDefault.toDouble /
       (500L * 1000 * 1000 * Dedup.NgramLinearBytesPerShingle).toDouble + 1e-12)
     // conf raises the budget → silent at the same volume
-    spark.conf.set(Dedup.NgramSpillBudgetKey, (256L << 30).toString)
-    try assert(Dedup.ngramSpillAdvisory(spark, 500L * 1000 * 1000, 5000000L, 1.0).isEmpty)
-    finally spark.conf.unset(Dedup.NgramSpillBudgetKey)
+    val raised = budgeted(spark.emptyDataFrame, 256L << 30).sparkSession
+    assert(Dedup.ngramSpillAdvisory(raised, 500L * 1000 * 1000, 5000000L, 1.0).isEmpty)
     // end-to-end: the operator still computes the same pairs while
     // advising (budget forced to 1 byte so the tiny fixture fires)
     val corpus = (0 until 8).map(i =>
@@ -1414,12 +1414,9 @@ class OperatorsSpec extends AnyFunSuite {
       .union(Seq((100L, (0 until 40).map(j => s"w$j").mkString(" "))).toDF("doc_id", "text"))
     val quiet = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", n = 3, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    spark.conf.set(Dedup.NgramSpillBudgetKey, "1")
-    try {
-      val advised = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", n = 3, threshold = 0.5)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(advised == quiet, "advisory must not change results")
-    } finally spark.conf.unset(Dedup.NgramSpillBudgetKey)
+    val advised = Dedup.ngramJaccardPairs(budgeted(corpus, 1L), "doc_id", "text",
+      n = 3, threshold = 0.5).as[(Long, Long, Double)].collect().toSet
+    assert(advised == quiet, "advisory must not change results")
   }
 
   test("ngramJaccard spillPolicy: sample auto-fits, fail refuses, both inert within budget") {
@@ -1440,8 +1437,8 @@ class OperatorsSpec extends AnyFunSuite {
       (i.toLong, (0 until 40).map(j => s"w${i * 100 + j}").mkString(" ")))
       .toDF("doc_id", "text")
       .union(Seq((100L, (0 until 40).map(j => s"w$j").mkString(" "))).toDF("doc_id", "text"))
-    def run(policy: String) =
-      Dedup.ngramJaccardPairs(corpus, "doc_id", "text", n = 3, threshold = 0.5,
+    def run(policy: String, docs: org.apache.spark.sql.DataFrame = corpus) =
+      Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.5,
         spillPolicy = policy).as[(Long, Long, Double)].collect().toSet
     val exact = run("advise")
     assert(exact == Set((0L, 100L, 1.0)), s"fixture contract: $exact")
@@ -1452,19 +1449,16 @@ class OperatorsSpec extends AnyFunSuite {
     // lands at headroom/(1+prior) × 0.9 ≈ 0.32 of the shingle volume.
     // The sampled route must still emit the twin pair at exactly 1.0
     // (consistent sampling keeps identical sets identical).
-    spark.conf.set(Dedup.NgramSpillBudgetKey,
-      (9L * 38 * Dedup.NgramLinearBytesPerShingle * 9 / 10).toString)
-    try {
-      val sampled = run("sample")
-      assert(sampled == Set((0L, 100L, 1.0)),
-        s"sampled route must keep the twin pair exactly at 1.0: $sampled")
-      // fail policy refuses loudly, naming the knob
-      val ex = intercept[IllegalStateException](run("fail"))
-      assert(ex.getMessage.contains("shingleKeepFraction") &&
-        ex.getMessage.contains("spillPolicy=fail"), ex.getMessage)
-      // advise (the default) proceeds exact — unchanged results
-      assert(run("advise") == exact)
-    } finally spark.conf.unset(Dedup.NgramSpillBudgetKey)
+    val tight = budgeted(corpus, 9L * 38 * Dedup.NgramLinearBytesPerShingle * 9 / 10)
+    val sampled = run("sample", tight)
+    assert(sampled == Set((0L, 100L, 1.0)),
+      s"sampled route must keep the twin pair exactly at 1.0: $sampled")
+    // fail policy refuses loudly, naming the knob
+    val ex = intercept[IllegalStateException](run("fail", tight))
+    assert(ex.getMessage.contains("shingleKeepFraction") &&
+      ex.getMessage.contains("spillPolicy=fail"), ex.getMessage)
+    // advise (the default) proceeds exact — unchanged results
+    assert(run("advise", tight) == exact)
   }
 
   test("ngramJaccard stage-2 gate: exact candidate count tightens, refuses, relaxes") {
@@ -1499,25 +1493,23 @@ class OperatorsSpec extends AnyFunSuite {
     // (30 prefix shingles × C(40,2) pairs): only stage 2 can fire
     val occ = 40L * 58
     assert(occ * Dedup.NgramLinearBytesPerShingle < 600000L)
-    spark.conf.set(Dedup.NgramSpillBudgetKey, "600000")
-    try {
-      // sample: tightens at the stage-2 fit; identical docs keep
-      // identical shingle samples, so every pair still scores 1.0
-      var sampled = Set.empty[(Long, Long, Double)]
-      val errS = stderrOf { sampled = run(twins, "sample") }
-      assert(errS.contains("stage-2 AUTO-SAMPLING"), errS.take(400))
-      assert(sampled == exact,
-        s"stage-2 sampling must keep all twin pairs: ${sampled.size}")
-      // fail: refuses at stage 2 naming the stage and the exact count
-      val ex = intercept[IllegalStateException](run(twins, "fail"))
-      assert(ex.getMessage.contains("stage-2") &&
-        ex.getMessage.contains("candidate pairs"), ex.getMessage)
-      // advise: warns, proceeds exact
-      var advised = Set.empty[(Long, Long, Double)]
-      val errA = stderrOf { advised = run(twins, "advise") }
-      assert(errA.contains("stage-2 ADVISORY"), errA.take(400))
-      assert(advised == exact)
-    } finally spark.conf.unset(Dedup.NgramSpillBudgetKey)
+    val tightTwins = budgeted(twins, 600000L)
+    // sample: tightens at the stage-2 fit; identical docs keep
+    // identical shingle samples, so every pair still scores 1.0
+    var sampled = Set.empty[(Long, Long, Double)]
+    val errS = stderrOf { sampled = run(tightTwins, "sample") }
+    assert(errS.contains("stage-2 AUTO-SAMPLING"), errS.take(400))
+    assert(sampled == exact,
+      s"stage-2 sampling must keep all twin pairs: ${sampled.size}")
+    // fail: refuses at stage 2 naming the stage and the exact count
+    val ex = intercept[IllegalStateException](run(tightTwins, "fail"))
+    assert(ex.getMessage.contains("stage-2") &&
+      ex.getMessage.contains("candidate pairs"), ex.getMessage)
+    // advise: warns, proceeds exact
+    var advised = Set.empty[(Long, Long, Double)]
+    val errA = stderrOf { advised = run(tightTwins, "advise") }
+    assert(errA.contains("stage-2 ADVISORY"), errA.take(400))
+    assert(advised == exact)
 
     // RELAX: disjoint-vocab corpus (zero true candidates) under a
     // budget that trips stage 1 — the prior over-tightens, the
@@ -1525,15 +1517,13 @@ class OperatorsSpec extends AnyFunSuite {
     val disjoint = (0 until 40).map(i =>
       (i.toLong, (0 until 60).map(j => s"d${i * 1000 + j}").mkString(" ")))
       .toDF("doc_id", "text")
-    spark.conf.set(Dedup.NgramSpillBudgetKey,
-      (occ * Dedup.NgramLinearBytesPerShingle * 9 / 10).toString)
-    try {
-      var out = Set.empty[(Long, Long, Double)]
-      val err = stderrOf { out = run(disjoint, "sample") }
-      assert(err.contains("AUTO-SAMPLING") && err.contains("RELAXING"),
-        err.take(600))
-      assert(out.isEmpty, s"disjoint docs must yield no pairs: $out")
-    } finally spark.conf.unset(Dedup.NgramSpillBudgetKey)
+    var out = Set.empty[(Long, Long, Double)]
+    val err = stderrOf {
+      out = run(budgeted(disjoint, occ * Dedup.NgramLinearBytesPerShingle * 9 / 10), "sample")
+    }
+    assert(err.contains("AUTO-SAMPLING") && err.contains("RELAXING"),
+      err.take(600))
+    assert(out.isEmpty, s"disjoint docs must yield no pairs: $out")
   }
 
   test("ngramJaccard LSH route: pair-identical to the prefix index at low thresholds") {

@@ -18,15 +18,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class RuntimeFilterSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def withConfs(kv: (String, String)*)(body: => Unit): Unit = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try { kv.foreach { case (k, v) => spark.conf.set(k, v) }; body }
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("selective dim filter injects a bloom filter on the fact-side scan of a shuffle join") {
     val base = java.nio.file.Files.createTempDirectory("graft_rf_").toString
     spark.range(200000L)
@@ -36,25 +27,22 @@ class RuntimeFilterSpec extends AnyFunSuite {
       .select(col("id").as("dk"), (col("id") % 50).as("dcat"))
       .write.parquet(s"$base/dim")
 
-    withConfs(
+    val fact = spark.read.parquet(s"$base/fact")
+    val dim = spark.read.parquet(s"$base/dim").filter(col("dcat") === 7)
+    val joined = GraftSession.withConf(
+      fact.join(dim, col("fk") === col("dk")).groupBy("dcat").agg(count(lit(1)).as("n")),
       // force a SHUFFLE join (runtime filters don't apply when the dim
       // broadcasts — the broadcast itself already prunes at the probe)
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       // scale the size gates down to toy data: creation side must look
       // "small enough", application side "big enough"
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10MB",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB"
-    ) {
-      val fact = spark.read.parquet(s"$base/fact")
-      val dim = spark.read.parquet(s"$base/dim").filter(col("dcat") === 7)
-      val joined = fact.join(dim, col("fk") === col("dk"))
-        .groupBy("dcat").agg(count(lit(1)).as("n"))
-      val optimized = joined.queryExecution.optimizedPlan.toString
-      assert(optimized.toLowerCase.contains("bloomfilter"),
-        s"no runtime bloom filter injected:\n$optimized")
-      // and the reduced plan still answers correctly
-      val row = joined.collect().head
-      assert(row.getLong(1) == 400L, s"wrong count: $row") // 400 dim keys match fact
-    }
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB")
+    val optimized = joined.queryExecution.optimizedPlan.toString
+    assert(optimized.toLowerCase.contains("bloomfilter"),
+      s"no runtime bloom filter injected:\n$optimized")
+    // and the reduced plan still answers correctly
+    val row = joined.collect().head
+    assert(row.getLong(1) == 400L, s"wrong count: $row") // 400 dim keys match fact
   }
 }

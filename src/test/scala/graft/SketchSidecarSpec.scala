@@ -316,23 +316,22 @@ class SketchSidecarSpec extends AnyFunSuite {
     val batch = inner
       .union(corpus.filter($"doc_id" < 9).select(($"doc_id" + 70000L).as("doc_id"), $"text"))
       .union(inner.filter($"doc_id" < 5004L).select(($"doc_id" + 80000L).as("doc_id"), $"text"))
-    def pairsNow() = SketchSidecar.minhashExactPairsAgainstSidecar(
+    def pairsNow(batch: org.apache.spark.sql.DataFrame) =
+      SketchSidecar.minhashExactPairsAgainstSidecar(
         batch, path, "doc_id", "text", cfg, exactThreshold = 0.3)
       .select($"id_new", $"id_other", $"other_in_corpus", round($"jaccard", 9).as("j"))
       .as[(Long, Long, Boolean, Double)].collect().toSet
-    def admitNow() = {
+    def admitNow(batch: org.apache.spark.sql.DataFrame) = {
       val (a, sk) = SketchSidecar.admitAndSketches(
         batch, path, "doc_id", "text", cfg, exactThreshold = 0.3)
       (a.select("doc_id").as[Long].collect().toSet,
         sk.select($"id", $"sig", $"sh").as[(Long, Seq[Long], Seq[Long])].collect().toSet)
     }
-    val fusedPairs = pairsNow()
-    val fusedAdmit = admitNow()
-    spark.conf.set("graft.sidecar.pruneMinStoreBytes", "0")
-    try {
-      assert(pairsNow() == fusedPairs)
-      assert(admitNow() == fusedAdmit)
-    } finally spark.conf.unset("graft.sidecar.pruneMinStoreBytes")
+    val fusedPairs = pairsNow(batch)
+    val fusedAdmit = admitNow(batch)
+    val pruned = GraftSession.withConf(batch, "graft.sidecar.pruneMinStoreBytes" -> "0")
+    assert(pairsNow(pruned) == fusedPairs)
+    assert(admitNow(pruned) == fusedAdmit)
     assert(fusedPairs.exists(_._3) && fusedPairs.exists(!_._3),
       "fixture must exercise corpus and sibling pairs")
   }
