@@ -14,7 +14,13 @@ import org.apache.spark.storage.StorageLevel
   *   - `original` — the frame as loaded, CACHED (the reference's
   *     `df_original: Arc<DataFrame>`); filter/SQL changes re-run the
   *     pipeline from here WITHOUT re-reading the file;
-  *   - `current` — the displayed frame after pipeline + cumulative sort.
+  *   - `piped` — the pipeline's output over `original`, before any sort;
+  *   - `current` — the displayed frame: `piped` under the cumulative sort.
+  *
+  * A sort changes neither the pipeline nor the row count, so `clickColumn`
+  * and `withSort` hand `piped` and its row count to the new container: a
+  * sort never re-runs the pipeline's jobs (T5's counts, T6's sizes), and
+  * a row-indexed frame keeps each index with its row.
   *
   * "Cache" means `persist(MEMORY_AND_DISK)` of the distributed frame —
   * never a driver collect; at 100 TB the current frame stays partitioned
@@ -26,30 +32,31 @@ final class Container private (
     val original: DataFrame,
     val cfg: PipelineConfig,
     val sortCriteria: Seq[SortOps.SortBy],
-    val detectedDelimiter: Option[Char]) {
+    val detectedDelimiter: Option[Char],
+    run: Container.Run) {
 
-  /** The displayed frame: pipeline over the cached original, then the
-    * cumulative sort (empty criteria → pipeline output as-is, mirroring
-    * the reference's reset-by-rerun, data_container.rs:251-267). */
-  lazy val current: DataFrame = {
-    val piped = Pipeline.run(original, cfg)
-    if (sortCriteria.isEmpty) piped else SortOps.stableSort(piped, sortCriteria)
-  }
+  /** The pipeline's output over the cached original, before any sort;
+    * computed on first use and shared by every sort of this container. */
+  lazy val piped: DataFrame = run.output.frame
+
+  /** The displayed frame: `piped` under the cumulative sort (empty
+    * criteria → `piped` as-is, mirroring the reference's reset-by-rerun,
+    * data_container.rs:251-267). */
+  lazy val current: DataFrame = SortOps.stableSort(piped, sortCriteria)
 
   /** Re-query from memory: new pipeline config, same cached original
     * (reference: filter change with read_data_from_file=false). */
   def withConfig(newCfg: PipelineConfig): Container =
-    new Container(spark, path, original, newCfg, Seq.empty, detectedDelimiter)
+    Container(spark, path, original, newCfg, detectedDelimiter)
 
   /** Header-click sort: fold the click into the cumulative criteria
     * (reference data_container.rs:351-449). */
   def clickColumn(column: String): Container =
-    new Container(spark, path, original, cfg,
-      SortOps.applyClick(sortCriteria, column), detectedDelimiter)
+    withSort(SortOps.applyClick(sortCriteria, column))
 
   /** Explicit sort criteria (empty = reset). */
   def withSort(criteria: Seq[SortOps.SortBy]): Container =
-    new Container(spark, path, original, cfg, criteria, detectedDelimiter)
+    new Container(spark, path, original, cfg, criteria, detectedDelimiter, run)
 
   /** Re-read from file (reference: delimiter/infer-rows change sets
     * read_data_from_file=true). The old cache is released only AFTER the
@@ -63,8 +70,13 @@ final class Container private (
     next
   }
 
-  /** M1 shape of the displayed frame. */
-  def shape: (Long, Int) = Introspect.shape(current)
+  /** M1 shape of the displayed frame. The row count is the one the
+    * pipeline's stats pass already took when T5 or T6 ran; a `count()`
+    * runs only when no count is known. */
+  def shape: (Long, Int) = run.output.rows match {
+    case Some(n) => (n, current.columns.length)
+    case None    => Introspect.shape(current)
+  }
 
   /** M3 example queries regenerated for the CURRENT schema (reference
     * refreshes them after every run, data_filter.rs:962-963). */
@@ -76,6 +88,16 @@ final class Container private (
 
 object Container {
 
+  /** One pipeline run over a cached original, lazily; a container and
+    * all its sorts share it. */
+  private final class Run(original: DataFrame, cfg: PipelineConfig) {
+    lazy val output: Pipeline.Output = Pipeline.runCounted(original, cfg)
+  }
+
+  private def apply(spark: SparkSession, path: Option[String], original: DataFrame,
+      cfg: PipelineConfig, delim: Option[Char]): Container =
+    new Container(spark, path, original, cfg, Seq.empty, delim, new Run(original, cfg))
+
   /** CLI-startup load (SURVEY §3.1): read via format dispatch (with CSV
     * delimiter sniffing), cache the original, run the pipeline. */
   def load(spark: SparkSession, path: String,
@@ -83,12 +105,11 @@ object Container {
       cfg: PipelineConfig = PipelineConfig()): Container = {
     val (df, delim) = Readers.readAuto(spark, path, readCfg)
     val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    new Container(spark, Some(path), cached, cfg, Seq.empty, delim)
+    Container(spark, Some(path), cached, cfg, delim)
   }
 
   /** Wrap an existing frame (e.g. a testdata parquet table). */
   def fromDataFrame(spark: SparkSession, df: DataFrame,
       cfg: PipelineConfig = PipelineConfig()): Container =
-    new Container(spark, None, df.persist(StorageLevel.MEMORY_AND_DISK),
-      cfg, Seq.empty, None)
+    Container(spark, None, df.persist(StorageLevel.MEMORY_AND_DISK), cfg, None)
 }

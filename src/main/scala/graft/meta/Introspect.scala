@@ -13,8 +13,11 @@ import org.apache.spark.sql.types._
   */
 object Introspect {
 
-  /** M1 — shape. Triggers one count job; cache the frame first when the
-    * shape is displayed repeatedly. */
+  /** M1 — shape. Runs a `count()`: two jobs under AQE (the aggregate's
+    * scan stage, then its final stage), over whatever the frame's plan
+    * computes. Cache the frame first when the shape is displayed
+    * repeatedly; `graft.Container.shape` skips the count when the
+    * pipeline already knows it. */
   def shape(df: DataFrame): (Long, Int) = (df.count(), df.columns.length)
 
   /** M2 — schema listing (name, dtype, index). */

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{GraftError, Materialize}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.util.matching.Regex
@@ -15,9 +16,10 @@ import scala.util.matching.Regex
   * (`data_container.rs:152-190`).
   *
   * Scale notes: every stage except T6 (row index) is a pure projection /
-  * filter — no shuffle, fully codegen'd, pushdown-transparent. T5 costs
-  * one map-side-combinable aggregate pass. T6 is the only inherently
-  * sequential-ish operator; see [[AddRowIndex]].
+  * filter — no shuffle, fully codegen'd, pushdown-transparent. T5 and
+  * T6 read data statistics; in a pipeline they share one exchange-free
+  * [[PartitionStats]] job. T6 is the only inherently sequential-ish
+  * operator; see [[AddRowIndex]].
   */
 trait Transform extends (DataFrame => DataFrame)
 
@@ -130,38 +132,78 @@ object ReplaceWithNull {
   val DefaultMarkers: Seq[String] = Seq("", "<N/D>")
 }
 
+/** One pass over a frame that returns each partition's row count and,
+  * when asked, every column's non-null count: the statistics T5 and T6
+  * read. It is ONE Spark job with no exchange, a `runJob` over the
+  * frame's physical RDD (`queryExecution.toRdd`), so the upstream stays
+  * whole-stage-codegen'd and rows never become `Row`s. Each task returns
+  * columns + 1 longs and the handler folds them as they arrive, so the
+  * driver holds O(columns + partitions) longs. (A `count` aggregate costs
+  * two jobs under AQE, its map stage and its final stage.)
+  *
+  * `rows(p)` is partition p's row count, in the partition space of
+  * `df`'s physical plan; `nonNull(i)` is column i's non-null count, empty
+  * when the pass was asked for row counts only. */
+final case class PartitionStats(rows: Array[Long], nonNull: Array[Long])
+
+object PartitionStats {
+  def of(df: DataFrame, nonNull: Boolean): PartitionStats = {
+    // row counts alone read no column: the scan prunes to nothing
+    val frame = if (nonNull) df else df.select()
+    val rdd = frame.queryExecution.toRdd
+    val width = frame.columns.length
+    val rows = new Array[Long](rdd.getNumPartitions)
+    val counts = new Array[Long](width)
+    df.sparkSession.sparkContext.runJob(rdd,
+      (it: Iterator[InternalRow]) => {
+        val c = new Array[Long](width + 1)
+        while (it.hasNext) {
+          val r = it.next()
+          var i = 0
+          while (i < width) { if (!r.isNullAt(i)) c(i) += 1; i += 1 }
+          c(width) += 1
+        }
+        c
+      },
+      (p: Int, c: Array[Long]) => {
+        rows(p) = c(width)
+        var i = 0
+        while (i < width) { counts(i) += c(i); i += 1 }
+      })
+    PartitionStats(rows, counts)
+  }
+}
+
 /** T5 — remove all-null columns (reference remove.rs:16-42). One
-  * map-side-combinable aggregate pass computes non-null counts for every
-  * column at once; zero-row frames lose ALL columns (any() over empty is
-  * false, remove.rs:157-180).
+  * [[PartitionStats]] job computes non-null counts for every column at
+  * once; zero-row frames lose ALL columns (any() over empty is false,
+  * remove.rs:157-180).
   *
   * COST NOTE: this operator inspects the data to decide the output
-  * schema, so it runs a driver-side action (`.head()` on the 1-row
-  * counts aggregate) mid-pipeline — and then the returned frame scans
-  * the input AGAIN. An uncached expensive upstream therefore computes
-  * twice. When the upstream is more than a scan, either `.cache()` /
-  * [[graft.Materialize.once]] the input first (the counts pass then
+  * schema, so standalone it runs one job, and the returned frame then
+  * scans its input again. Inside [[Pipeline.run]] that job is the one
+  * stats pass T5 and T6 share, over the frame T6 pins, so a
+  * non-rescan-safe upstream computes once; a standalone call over an
+  * expensive uncached upstream computes it twice unless the input is
+  * `.cache()`d / [[graft.Materialize.once]]d first (the counts pass then
   * reads the materialized blocks — see TransformsSpec's cached-input
-  * plan test) or precompute the counts and call [[applyWithCounts]].
+  * plan test) or the counts come from elsewhere via [[applyWithCounts]].
   */
 case object RemoveNullColumns extends Transform {
-  def apply(df: DataFrame): DataFrame = {
-    if (df.columns.isEmpty) return df
-    val counts: Row =
-      df.select(df.columns.map(c => count(col(c)).as(c)).toSeq: _*).head()
-    applyWithCounts(df, counts)
-  }
+  def apply(df: DataFrame): DataFrame =
+    if (df.columns.isEmpty) df
+    else keepNonNull(df, PartitionStats.of(df, nonNull = true).nonNull.toSeq)
 
   /** Variant for callers that already hold the per-column non-null
-    * counts (one `Row` in the column order of `df.columns`) — avoids the
-    * second upstream compute entirely when the counts were folded into
-    * an earlier pass. */
-  def applyWithCounts(df: DataFrame, counts: Row): DataFrame = {
-    val keep = df.columns.zipWithIndex.collect {
-      case (c, i) if counts.getLong(i) > 0L => c
-    }
+    * counts (one `Row` in the column order of `df.columns`): runs no
+    * job. */
+  def applyWithCounts(df: DataFrame, counts: Row): DataFrame =
+    keepNonNull(df, df.columns.indices.map(counts.getLong))
+
+  private[operators] def keepNonNull(df: DataFrame, nonNull: Seq[Long]): DataFrame = {
+    val keep = df.columns.toSeq.zip(nonNull).collect { case (c, n) if n > 0L => c }
     if (keep.isEmpty) df.sparkSession.emptyDataFrame
-    else df.select(keep.map(col).toSeq: _*)
+    else df.select(keep.map(col): _*)
   }
 }
 
@@ -169,14 +211,13 @@ case object RemoveNullColumns extends Transform {
   * (reference add.rs:18-42 via LazyFrame::with_row_index; name-conflict
   * suffixing `_1`..`_1000` per data_filter.rs:1195-1229).
   *
-  * Scale design: contiguous global numbering is inherently two-pass.
-  * `zipWithIndex` does exactly the right distributed thing — one job to
-  * count per-partition sizes, then a map with broadcast prefix offsets.
-  * No shuffle, no single-partition window. Determinism caveat: index
-  * assignment follows the current partition order; apply AFTER any
-  * order-defining operation (the reference pipeline adds it last too,
-  * data_container.rs:181-184). Reference dtype is u32 → widened to long
-  * (SURVEY §1.2).
+  * Scale design: contiguous global numbering is inherently two-pass —
+  * one job for per-partition sizes ([[PartitionStats]]), then a narrow
+  * pass that adds each partition's prefix offset. No shuffle, no
+  * single-partition window. Determinism caveat: index assignment follows
+  * the current partition order; apply AFTER any order-defining operation
+  * (the reference pipeline adds it last too, data_container.rs:181-184).
+  * Reference dtype is u32 → widened to long (SURVEY §1.2).
   */
 final case class AddRowIndex(name: String = "Row Number", offset: Long = 1L)
     extends Transform {
@@ -197,37 +238,6 @@ object AddRowIndex {
     }
   }
 
-  /** Contiguous global numbering WITHOUT an RDD round-trip (the
-    * zipWithIndex formulation serialized InternalRow→Row→InternalRow and
-    * broke whole-stage codegen around the pipeline's last stage). Same
-    * two-pass shape zipWithIndex uses — one job for per-partition sizes,
-    * then a narrow pass — expressed in DataFrame land:
-    * `monotonically_increasing_id` is documented as
-    * (partitionId << 33) + recordNumber, so the in-partition record
-    * number is `mid - (pid << 33)`, and the global index adds the
-    * prefix-sum of partition sizes. The sizes are COLLECTED to the
-    * driver (numPartitions longs — the exact bounded driver-side
-    * model-parameter shape zipWithIndex uses) and re-enter the plan as
-    * one array literal read by `element_at(prefix, pid+1)`: a narrow
-    * projection, no join, no BroadcastExchange, no broadcast-timeout
-    * exposure. At 100 TB / ~1M partitions the literal is a few MB inside
-    * the once-per-stage task binary — same payload zipWithIndex ships.
-    * Index assignment follows partition order, as before.
-    *
-    * Partition-space pinning: the counts pass and the output pass MUST
-    * see the same partition space, but two independently-planned
-    * executions of a live plan can diverge (AQE coalesces the
-    * column-pruned counts pass differently from the full-width output
-    * pass after a shuffle; an optimizer rule can drop a Sort under the
-    * counts aggregate), silently corrupting indexes. So wide upstreams
-    * are materialized ONCE ([[graft.Materialize.once]], lazily — the
-    * counts job performs the materialization, the output job reads
-    * blocks). Upstreams that re-execute identically ([[rescanSafe]]:
-    * deterministic narrow ops over a file scan / cache / checkpoint)
-    * skip the materialization entirely — the counts pass column-prunes
-    * the re-scan to nearly nothing, and the pin was measured at 2.5× the
-    * query cost on the sf0.1 gate. Temp column names are
-    * collision-proofed against user columns. */
   /** True when `plan` re-executes IDENTICALLY on every run — same
     * partition space, same per-partition row order: deterministic narrow
     * ops (project/filter) over a leaf whose partitioning is PINNED for
@@ -259,31 +269,46 @@ object AddRowIndex {
     }
   }
 
+  /** Partition-space pinning: the sizes pass and the output pass MUST
+    * see the same partition space, but two independently-planned
+    * executions of a live plan can diverge (AQE coalesces a column-pruned
+    * pass differently from the full-width output pass after a shuffle; an
+    * optimizer rule can drop a Sort under a pruned pass), silently
+    * corrupting indexes. So a wide upstream is materialized ONCE
+    * ([[graft.Materialize.once]], lazily — the sizes job performs the
+    * materialization, the output job reads blocks). A [[rescanSafe]]
+    * upstream skips the materialization entirely — the sizes pass
+    * column-prunes the re-scan to nearly nothing, and the pin was
+    * measured at 2.5× the query cost on the sf0.1 gate. Both passes read
+    * the frame this returns. */
+  private[operators] def pin(df: DataFrame): DataFrame =
+    if (rescanSafe(df.queryExecution.optimizedPlan, df.sparkSession.sparkContext.isLocal)) df
+    else Materialize.once(df)
+
   def withRowIndex(df: DataFrame, name: String, offset: Long): DataFrame = {
+    val base = pin(df)
+    stamp(base, PartitionStats.of(base, nonNull = false).rows, name, offset)
+  }
+
+  /** The output pass over `df`, whose partition p holds `sizes(p)` rows:
+    * `monotonically_increasing_id` is documented as
+    * (partitionId << 33) + recordNumber, so the in-partition record
+    * number is `mid - (pid << 33)`, and the global index adds the prefix
+    * sum of the sizes. The prefix sums (numPartitions longs — the bounded
+    * driver-side shape zipWithIndex uses) enter the plan as one array
+    * literal read by `element_at(prefix, pid+1)`: a narrow projection, no
+    * join, no BroadcastExchange, no broadcast-timeout exposure, no
+    * InternalRow→Row round-trip. At 100 TB / ~1M partitions the literal
+    * is a few MB inside the once-per-stage task binary — the payload
+    * zipWithIndex ships. */
+  private[operators] def stamp(df: DataFrame, sizes: Array[Long], name: String,
+      offset: Long): DataFrame = {
     val unique = resolveUniqueName(name, df.columns.toSeq)
-    val pidCol = resolveUniqueName("__pid", df.columns.toSeq :+ unique)
-    val localCol = resolveUniqueName("__local", df.columns.toSeq :+ unique :+ pidCol)
-    val stamped = df
-      .withColumn(pidCol, spark_partition_id())
-      .withColumn(localCol,
-        monotonically_increasing_id() - shiftleft(col(pidCol).cast("long"), 33))
-    val snap =
-      if (rescanSafe(df.queryExecution.optimizedPlan,
-          df.sparkSession.sparkContext.isLocal)) stamped
-      else stamped.transform(Materialize.once(_))
-    // driver-side prefix sums over the per-partition counts; empty
-    // partitions never appear in the counts (no rows to group) but still
-    // occupy a pid slot, so gaps contribute 0
-    val counts = snap.groupBy(pidCol).agg(count(lit(1)).as(localCol))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val maxPid = if (counts.isEmpty) -1 else counts.keys.max
-    val prefix = new Array[Long](maxPid + 1)
-    var acc = 0L
-    for (p <- 0 to maxPid) { prefix(p) = acc; acc += counts.getOrElse(p, 0L) }
-    snap
-      .withColumn(unique,
-        col(localCol) + element_at(typedlit(prefix.toSeq), col(pidCol) + 1) + lit(offset))
-      .select((col(unique) +: df.columns.map(col).toSeq): _*)
+    val prefix = sizes.scanLeft(0L)(_ + _).init
+    val pid = spark_partition_id()
+    val local = monotonically_increasing_id() - shiftleft(pid.cast("long"), 33)
+    val index = local + element_at(typedlit(prefix.toSeq), pid + 1) + lit(offset)
+    df.select(index.as(unique) +: df.columns.map(col).toSeq: _*)
   }
 }
 
@@ -318,14 +343,35 @@ final case class PipelineConfig(
     rowIndex: Option[(String, Long)] = None)
 
 object Pipeline {
-  def stages(cfg: PipelineConfig): Seq[Transform] =
+  /** The pipeline's frame and, when the run counted them, its rows. */
+  final case class Output(frame: DataFrame, rows: Option[Long])
+
+  /** T1–T4: projections, filters and the SQL stage, all lazy. */
+  private def front(cfg: PipelineConfig): Seq[Transform] =
     cfg.dropRegex.map(DropColumnsByRegex).toSeq ++
       cfg.normalizeRegex.map(NormalizeEuroStrings).toSeq ++
       Seq(ReplaceWithNull(cfg.nullMarkers)) ++
-      cfg.sql.map(q => SqlTransform(q, cfg.tableName)).toSeq ++
-      (if (cfg.removeNullCols) Seq(RemoveNullColumns) else Seq.empty) ++
-      cfg.rowIndex.map { case (n, o) => AddRowIndex(n, o) }.toSeq
+      cfg.sql.map(q => SqlTransform(q, cfg.tableName)).toSeq
 
-  def run(df: DataFrame, cfg: PipelineConfig): DataFrame =
-    stages(cfg).foldLeft(df)((d, t) => t(d))
+  def run(df: DataFrame, cfg: PipelineConfig): DataFrame = runCounted(df, cfg).frame
+
+  /** [[run]], with the output's row count when T5 or T6 is on. Those two
+    * share ONE [[PartitionStats]] job, run on the frame T6 stamps (the
+    * upstream, or its snapshot when T6 must pin it): T5 reads its
+    * non-null counts, and T6 its per-partition sizes. T5's select is
+    * narrow, so the partition space T6 stamps is the one the pass
+    * counted. With neither flag on, the run starts no job. */
+  def runCounted(df: DataFrame, cfg: PipelineConfig): Output = {
+    val up = front(cfg).foldLeft(df)((d, t) => t(d))
+    if (!cfg.removeNullCols && cfg.rowIndex.isEmpty) return Output(up, None)
+    val base = if (cfg.rowIndex.isDefined) AddRowIndex.pin(up) else up
+    val prune = cfg.removeNullCols && base.columns.nonEmpty
+    val stats = PartitionStats.of(base, nonNull = prune)
+    val kept = if (prune) RemoveNullColumns.keepNonNull(base, stats.nonNull.toSeq) else base
+    // every column removed: T5 yields the 0x0 frame, and T6 numbers its
+    // zero rows
+    val sizes = if (prune && kept.columns.isEmpty) Array.emptyLongArray else stats.rows
+    val out = cfg.rowIndex.fold(kept) { case (n, o) => AddRowIndex.stamp(kept, sizes, n, o) }
+    Output(out, Some(sizes.sum))
+  }
 }

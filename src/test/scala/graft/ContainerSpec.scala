@@ -56,4 +56,29 @@ class ContainerSpec extends AnyFunSuite {
     assert(!ex.exists(_.contains("`qty`")))    // gone from the current schema
     c.release()
   }
+
+  test("sorting a row-indexed container after a non-rescan-safe SQL stage keeps each index with its row") {
+    val df = (1 to 60).map(i => (i % 7, i, (i * 37) % 11)).toDF("g", "v", "w").repartition(4)
+    // GROUP BY without ORDER BY: an exchange, so the index is stamped over
+    // a snapshot, and a re-run of the query may number rows differently
+    val c = Container.fromDataFrame(spark, df, PipelineConfig(
+      sql = Some("SELECT g, SUM(v) AS sv, MAX(w) AS mw FROM AllData GROUP BY g"),
+      rowIndex = Some(("Row Number", 1L))))
+    try {
+      def byIndex(x: Container) = x.current.as[(Long, Int, Long, Int)].collect().toSeq
+      val unsorted = byIndex(c)
+      val n = unsorted.length
+      assert(n == 7 && unsorted.map(_._1).sorted == (1L to n))
+      val clicked = c.clickColumn("sv")
+      val criteria = Seq(SortOps.SortBy("mw", ascending = true, nullsLast = true),
+        SortOps.SortBy("g", ascending = false, nullsLast = true))
+      for (sorted <- Seq(clicked, clicked.clickColumn("g"), c.withSort(criteria))) {
+        val rows = byIndex(sorted)
+        assert(rows.toSet == unsorted.toSet, "every index stays with its row")
+        assert(rows.map(_._1).sorted == (1L to n), "indexes stay contiguous 1..n")
+        assert(sorted.shape == ((n.toLong, 4)))
+      }
+      assert(byIndex(clicked).map(_._3) == unsorted.map(_._3).sorted.reverse)
+    } finally c.release()
+  }
 }

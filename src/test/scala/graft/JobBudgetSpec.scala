@@ -1,0 +1,88 @@
+package graft
+
+import java.util.UUID
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.operators.{AddRowIndex, Pipeline, PipelineConfig, RemoveNullColumns, SortOps}
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Spark jobs per viewer action on a cached frame. The bounds track the
+  * shared stats pass and the sorts' reuse of the piped frame; they are
+  * never loosened to make a test pass. */
+class JobBudgetSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  /** `body`'s result and the Spark jobs it started on this thread. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"job-budget-${UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job budget")
+    try {
+      val r = body
+      ListenerBridge.drain(sc)
+      (r, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  def cachedFrame() = {
+    val df = Seq((3, Option("c"), Option.empty[String]), (1, None, None),
+      (2, Option("b"), None), (5, Option("e"), None))
+      .toDF("k", "s", "dead").repartition(3).cache()
+    df.count()
+    df
+  }
+
+  val both = PipelineConfig(removeNullCols = true, rowIndex = Some(("Row Number", 1L)))
+
+  test("Pipeline.run with remove-null-columns and row-index takes one job") {
+    val df = cachedFrame()
+    try {
+      val (out, jobs) = jobsOf(Pipeline.run(df, both))
+      assert(jobs == 1)
+      assert(out.columns.toSeq == Seq("Row Number", "k", "s"))
+      assert(jobsOf(Pipeline.run(df, PipelineConfig()))._2 == 0)
+    } finally df.unpersist()
+  }
+
+  test("sorts of a container reuse its piped frame and row count: no jobs") {
+    val df = cachedFrame()
+    val c = Container.fromDataFrame(spark, df, both)
+    try {
+      // the first shape runs the pipeline's one stats job, and no count
+      assert(jobsOf(c.shape) == ((4L, 3), 1))
+      assert(jobsOf(c.current)._2 == 0)
+      val clicked = c.clickColumn("k")
+      val (_, clickJobs) = jobsOf(clicked.current)
+      assert(clickJobs == 0)
+      val sorted = c.withSort(Seq(SortOps.SortBy("s", ascending = true, nullsLast = true)))
+      val (_, sortJobs) = jobsOf(sorted.current)
+      assert(sortJobs == 0)
+      assert(jobsOf(clicked.shape) == ((4L, 3), 0))
+      assert(jobsOf(sorted.clickColumn("k").shape) == ((4L, 3), 0))
+      assert(clicked.current.select("k").as[Int].collect().toSeq == Seq(5, 3, 2, 1))
+    } finally c.release()
+  }
+
+  test("standalone RemoveNullColumns and AddRowIndex take one job each") {
+    val df = cachedFrame()
+    try {
+      val (kept, t5) = jobsOf(RemoveNullColumns(df))
+      assert(t5 == 1 && kept.columns.toSeq == Seq("k", "s"))
+      val (indexed, t6) = jobsOf(AddRowIndex("idx", 1L)(df))
+      assert(t6 == 1 && indexed.columns.toSeq == Seq("idx", "k", "s", "dead"))
+    } finally df.unpersist()
+  }
+}
