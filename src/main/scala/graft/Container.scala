@@ -71,8 +71,8 @@ final class Container private (
   }
 
   /** M1 shape of the displayed frame. The row count is the one the
-    * pipeline's stats pass already took when T5 or T6 ran; a `count()`
-    * runs only when no count is known. */
+    * pipeline's stats pass already took when T5 or T6 ran; otherwise
+    * [[Introspect.shape]] counts it in one job, without running the sort. */
   def shape: (Long, Int) = run.output.rows match {
     case Some(n) => (n, current.columns.length)
     case None    => Introspect.shape(current)

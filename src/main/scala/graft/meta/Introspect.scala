@@ -1,7 +1,11 @@
 package graft.meta
 
+import graft.operators.PartitionStats
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.types._
+import scala.annotation.tailrec
 
 /** M1–M3 introspection operators (reference file_info.rs, sqls.rs).
   *
@@ -13,12 +17,28 @@ import org.apache.spark.sql.types._
   */
 object Introspect {
 
-  /** M1 — shape. Runs a `count()`: two jobs under AQE (the aggregate's
-    * scan stage, then its final stage), over whatever the frame's plan
-    * computes. Cache the frame first when the shape is displayed
-    * repeatedly; `graft.Container.shape` skips the count when the
-    * pipeline already knows it. */
-  def shape(df: DataFrame): (Long, Int) = (df.count(), df.columns.length)
+  /** M1 — shape, in ONE Spark job with no exchange of its own (a
+    * `count()` takes two under AQE, its scan stage and its final stage).
+    * The count runs over the frame's order-free plan: the root `Project`
+    * and `Sort` nodes of its cache-substituted logical plan are peeled
+    * off, since neither changes the row count, and peeling stops at the
+    * first node of any other kind (`Limit`, `Filter`, `Aggregate`,
+    * `Window`, `Generate`, …) or at a cached frame. The rest is re-hosted
+    * on `df`'s session and counted by one [[PartitionStats]] pass. So a
+    * sorted frame never runs its range-partition sort (sampling job and
+    * shuffle) to be counted, a cached frame takes 1 job and 1 stage, and
+    * a `GROUP BY` its map stage plus 1. `graft.Container.shape` skips
+    * the count when the pipeline already knows it. */
+  def shape(df: DataFrame): (Long, Int) = {
+    val counted = SessionBridge.ofRows(df.sparkSession, orderFree(df.queryExecution.withCachedData))
+    (PartitionStats.of(counted, nonNull = false).rows.sum, df.columns.length)
+  }
+
+  @tailrec private def orderFree(plan: LogicalPlan): LogicalPlan = plan match {
+    case p: Project => orderFree(p.child)
+    case s: Sort    => orderFree(s.child)
+    case other      => other
+  }
 
   /** M2 — schema listing (name, dtype, index). */
   def schemaListing(df: DataFrame): Seq[(String, String, Int)] =

@@ -1,8 +1,14 @@
 package graft
 
 import graft.meta.Introspect
+import graft.operators.{Pipeline, PipelineConfig, SortOps}
 import graft.sql.GraftSql
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 class IntrospectSpec extends AnyFunSuite {
@@ -20,6 +26,55 @@ class IntrospectSpec extends AnyFunSuite {
     assert(Introspect.schemaListing(frame) == Seq(
       ("name", "string", 0), ("qty", "int", 1),
       ("price", "double", 2), ("created", "timestamp", 3)))
+  }
+
+  /** 40 rows over keys 0..6, with nulls in `v`. */
+  def keyed: DataFrame = (1 to 40)
+    .map(i => (i % 7, s"s${i % 11}", if (i % 3 == 0) None else Some(i * 0.5)))
+    .toDF("k", "s", "v")
+
+  def sameShape(df: DataFrame): Unit =
+    assert(Introspect.shape(df) == ((df.count(), df.columns.length)))
+
+  test("shape counts what count() counts, whichever nodes top the plan") {
+    val cached = keyed.repartition(3).cache()
+    val c = Container.fromDataFrame(spark, keyed).clickColumn("k")
+    try {
+      sameShape(cached)
+      sameShape(SortOps.stableSort(cached, Seq(SortOps.SortBy("s", ascending = false,
+        nullsLast = true))))
+      sameShape(c.current)
+      // peeling stops at a Limit, an Offset and a Filter under the sort
+      sameShape(cached.orderBy("v").limit(5))
+      sameShape(cached.orderBy("v").offset(36))
+      sameShape(cached.filter($"v" > 10).orderBy("s"))
+      sameShape(cached.groupBy("k").agg(count(lit(1)).as("n")).orderBy("k"))
+      sameShape(cached.withColumn("rn", row_number().over(Window.partitionBy("k").orderBy("s")))
+        .filter($"rn" <= 2).orderBy("k"))
+      // Generate changes the row count: k copies of each row
+      sameShape(cached.select($"k", explode(array_repeat($"s", $"k")).as("e")))
+      sameShape(cached.sortWithinPartitions("s"))
+      sameShape(cached.filter($"k" < 0).orderBy("k"))
+      sameShape(spark.emptyDataFrame)
+      sameShape(Pipeline.run(keyed.groupBy("s").agg(max("v").as("v")),
+        PipelineConfig(rowIndex = Some(("Row Number", 1L)))))
+    } finally {
+      cached.unpersist()
+      c.release()
+    }
+  }
+
+  test("shape over a freshly persisted projection fills every partition of its cache") {
+    // the root Project is the cached plan: the count must read through it
+    val df = keyed.repartition(3).select($"k", $"s").persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      assert(Introspect.shape(df) == ((40L, 2)))
+      val rdd = df.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
+      }.get
+      val info = spark.sparkContext.getRDDStorageInfo.find(_.id == rdd).get
+      assert(info.numPartitions == 3 && info.numCachedPartitions == 3)
+    } finally df.unpersist()
   }
 
   test("column filtering skips generated names (COLS_FILTER_OUT)") {

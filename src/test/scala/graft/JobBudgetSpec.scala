@@ -3,14 +3,15 @@ package graft
 import java.util.UUID
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.meta.Introspect
 import graft.operators.{AddRowIndex, Pipeline, PipelineConfig, RemoveNullColumns, SortOps}
 import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark jobs per viewer action on a cached frame. The bounds track the
-  * shared stats pass and the sorts' reuse of the piped frame; they are
-  * never loosened to make a test pass. */
+  * shared stats pass, the sorts' reuse of the piped frame and the one-job
+  * shape; they are never loosened to make a test pass. */
 class JobBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -84,5 +85,28 @@ class JobBudgetSpec extends AnyFunSuite {
       val (indexed, t6) = jobsOf(AddRowIndex("idx", 1L)(df))
       assert(t6 == 1 && indexed.columns.toSeq == Seq("idx", "k", "s", "dead"))
     } finally df.unpersist()
+  }
+
+  test("Introspect.shape takes one job, or the map stage plus one over a GROUP BY") {
+    val df = cachedFrame()
+    val c = Container.fromDataFrame(spark, df.select("k", "s"))
+    try {
+      assert(jobsOf(Introspect.shape(df)) == ((4L, 3), 1))
+      // no sampling job: the count never runs the sort
+      val sorted = SortOps.stableSort(df, Seq(SortOps.SortBy("k", ascending = false,
+        nullsLast = true)))
+      assert(jobsOf(Introspect.shape(sorted)) == ((4L, 3), 1))
+      // the first count also fills the container's fresh cache, which
+      // AQE runs as a job of its own
+      val (fresh, freshJobs) = jobsOf(Introspect.shape(c.current))
+      assert(fresh == ((4L, 2)) && freshJobs <= 2)
+      assert(jobsOf(Introspect.shape(c.current)) == ((4L, 2), 1))
+      assert(jobsOf(Introspect.shape(c.clickColumn("k").current)) == ((4L, 2), 1))
+      val (grouped, groupJobs) = jobsOf(Introspect.shape(df.groupBy("s").count()))
+      assert(grouped == ((4L, 2)) && groupJobs <= 2)
+    } finally {
+      c.release()
+      df.unpersist()
+    }
   }
 }
