@@ -249,7 +249,7 @@ object Pq {
     * frame is small (≤ k·rerank rows per query) but COMPUTING it is
     * the full ADC codes scan + top-k — materialize once so the
     * coverage count, the key broadcast, and the re-join share one
-    * scan (same pattern as Similarity.queryIvfIndex).
+    * scan.
     *
     * The coverage check runs as ONE aggregate over a LEFT store join
     * (r18; it was a count() action PAIR — two driver round-trips per
@@ -565,14 +565,15 @@ object Pq {
     * `isin` literal so the codes scan prunes at PARTITION level —
     * unprobed cells are never read from storage (plan-asserted in
     * IvfPqIndexSpec) — and the probed cells are scored with ADC
-    * lookups, never raw dots. `rerankWith` re-scores the top
+    * lookups, never raw dots. The query side is collected once and the
+    * codes store is read through the schema cached with the centroids,
+    * as in [[Similarity.queryIvfIndex]]. `rerankWith` re-scores the top
     * k·rerankFactor survivors exactly against the caller's vector
     * store; without it the ADC ranking is returned as-is. */
   def queryIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
       nprobe: Int = Auto, rerankWith: Option[(DataFrame, String, String)] = None,
       rerankFactor: Int = Auto, excludeSelf: Boolean = true): DataFrame = {
-    import graft.functions.HashFunctions.nearestCentroids
     require((nprobe == Auto || nprobe >= 1) && (rerankFactor == Auto || rerankFactor >= 1),
       s"need nprobe >= 1 or Auto, rerankFactor >= 1 or Auto (got $nprobe, $rerankFactor)")
     graft.sources.FsSwap.requireCommitted(
@@ -585,16 +586,10 @@ object Pq {
     // with more cells keeps the scanned fraction (and recall) instead
     // of silently shrinking the probe
     val nprobe0 = if (nprobe == Auto) resolveNprobe(cents.length) else nprobe
-    // materialize the expanded probe frame ONCE before the driver-side
-    // cell collect — same consistency rationale (and, r18, the same
-    // LAZY discipline: the collect below is the materializing job) as
-    // Similarity.queryIvfIndex
-    val q = graft.Materialize.once(
-      lutQueries(queries, qidCol, qvecCol, model)
-        .withColumn("cell", explode(nearestCentroids(col("qv"), cents, nprobe0))))
-    val probeCells: Array[Int] =
-      q.select("cell").distinct().collect().map(_.getInt(0))
-    val codes = spark.read.parquet(s"$path/codes")
+    // the query side is collected once, as in Similarity.queryIvfIndex
+    val (q, probeCells) = Similarity.collectProbes(spark,
+      lutQueries(queries, qidCol, qvecCol, model), cents, nprobe0)
+    val codes = Similarity.readStore(spark, path)
       .filter(col("cell").isin(probeCells.map(Integer.valueOf): _*))
     val scored = adcScored(codes.join(broadcast(q), Seq("cell")), model, excludeSelf)
     rerankWith match {

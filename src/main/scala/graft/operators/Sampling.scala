@@ -63,9 +63,9 @@ object Sampling {
     * rows; a different `salt` is an independent draw. Groups smaller
     * than k keep everything.
     *
-    * Shape: the partial-then-final top-k ([[Similarity.topKPerKey]]'s
-    * discipline) — rank within (group, partition) first, so at most
-    * k rows per partition per group reach the exchange; the md5
+    * Shape: a partial-then-final top-k — rank within (group, partition)
+    * first, so at most k rows per partition per group reach the
+    * exchange; the md5
     * priority is uniform, so group skew collapses at the map side. */
   def samplePerGroup(df: DataFrame, groupCol: String, idCol: String, k: Int,
       salt: String = "#kpg"): DataFrame = {

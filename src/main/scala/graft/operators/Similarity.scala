@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * Two tiers:
   *   - [[bruteForceTopK]]: exact cosine top-k — the correctness baseline.
   *     Scan is embarrassingly parallel (queries broadcast); the only
-  *     shuffle is the final per-query top-k aggregate, which ships at
-  *     most k rows per (partition, query) thanks to the window-free
-  *     partial top-k trick below.
+  *     shuffle is the final per-query top-k, which ships at most k rows
+  *     per (partition, query) thanks to the partial top-k Spark infers
+  *     for [[topKPerKey]].
   *   - [[ivfTopK]]: IVF-style scale path — vectors are pre-assigned to
   *     coarse cells (deterministic seeded "centroids" = hyperplane sign
   *     buckets); a query probes only its own cell plus `nprobe` nearest
@@ -65,18 +65,22 @@ object Similarity {
     topKPerKey(scored, Seq("query_id"), col("cosine").desc, k)
   }
 
-  /** Partial-then-final top-k: rank inside each (partition, key) first so
-    * the shuffle carries ≤ k rows per partition per key, then rank again
-    * after the exchange. Equivalent to a global per-key top-k but without
-    * shipping the full scored set — the difference between "works" and
-    * "doesn't" at 100 TB fan-in. Ties broken by `id` for determinism. */
+  /** Per-key top-k as one `row_number() <= k` window, ties broken by `id`
+    * for determinism; output is `scored`'s columns plus `rank`.
+    *
+    * The partial top-k that keeps the shuffle small comes from Spark:
+    * for `row_number() <= k` with k below
+    * `spark.sql.optimizer.windowGroupLimitThreshold` (1000 by default)
+    * the optimizer infers a `WindowGroupLimit`, planned as a Partial
+    * limit below the keys' one hash exchange (≤ k rows per partition per
+    * key cross it) and a Final one above it. At k ≥ 1000 the full scored
+    * set crosses that one exchange. With no keys the window is global:
+    * an explicit `limit` plans it over a `TakeOrderedAndProject`, so
+    * ≤ k rows per partition reach its single partition at any k. */
   def topKPerKey(scored: DataFrame, keys: Seq[String], order: Column, k: Int): DataFrame = {
-    val localW = Window.partitionBy((keys.map(col) :+ spark_partition_id()): _*)
-      .orderBy(order, col("id").asc)
-    val globalW = Window.partitionBy(keys.map(col): _*).orderBy(order, col("id").asc)
-    scored
-      .withColumn("__lr", row_number().over(localW)).filter(col("__lr") <= k).drop("__lr")
-      .withColumn("rank", row_number().over(globalW)).filter(col("rank") <= k)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order, col("id").asc)
+    val top = if (keys.isEmpty) scored.orderBy(order, col("id").asc).limit(k) else scored
+    top.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** Deterministic hash-ordered RAW vector sample — the shared
@@ -375,18 +379,53 @@ object Similarity {
     * pure per-call fixed cost, since centroids are FROZEN between
     * commits by design (appends never touch them; a rebuild recommits
     * the marker, which invalidates). A missing marker never caches —
-    * an uncommitted index must not pin stale centroids. */
-  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Long), Array[Array[Double]])]()
-
+    * an uncommitted index must not pin stale centroids. The same entry
+    * holds the store's schema ([[readStore]]), which every append,
+    * rebuild and compaction invalidates with it. */
   private[operators] def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Array[Double]] = {
-    def load(): Array[Array[Double]] = {
+      path: String): Array[Array[Double]] = indexParts(spark, path).centroids
+
+  /** A committed index's per-commit parts: its centroids, and the name
+    * and schema of its cell-partitioned store (`vectors` for IVF, `codes`
+    * for IVF-PQ). The store's are taken on first use, so a caller that
+    * needs only the centroids (an append) pays for neither. */
+  private final class IndexParts(path: String, val centroids: Array[Array[Double]]) {
+    private var store: (String, org.apache.spark.sql.types.StructType) = _
+
+    def storeOf(spark: org.apache.spark.sql.SparkSession)
+        : (String, org.apache.spark.sql.types.StructType) = synchronized {
+      if (store == null) {
+        val vectors = new org.apache.hadoop.fs.Path(s"$path/vectors")
+        val dir =
+          if (vectors.getFileSystem(spark.sessionState.newHadoopConf()).exists(vectors))
+            "vectors"
+          else "codes"
+        store = (dir, spark.read.parquet(s"$path/$dir").schema)
+      }
+      store
+    }
+  }
+
+  /** The index's store read through the schema cached with its
+    * centroids: a probe or advisor scan lists the cell directories but
+    * runs no schema-inference job. */
+  private[operators] def readStore(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame = {
+    val (dir, schema) = indexParts(spark, path).storeOf(spark)
+    spark.read.schema(schema).parquet(s"$path/$dir")
+  }
+
+  private val indexCache = new java.util.concurrent.ConcurrentHashMap[
+    String, ((Long, Long), IndexParts)]()
+
+  private def indexParts(spark: org.apache.spark.sql.SparkSession,
+      path: String): IndexParts = {
+    def load(): IndexParts = {
       val cents = spark.read.parquet(s"$path/_centroids")
         .orderBy("cell").collect()
         .map(_.getSeq[Double](1).toArray)
       require(cents.nonEmpty, s"no centroids at $path/_centroids")
-      cents
+      new IndexParts(path, cents)
     }
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -399,44 +438,61 @@ object Similarity {
     stamp match {
       case None => load()
       case Some(s) =>
-        centroidCache.compute(fs.makeQualified(p).toString, (_, prev) =>
+        indexCache.compute(fs.makeQualified(p).toString, (_, prev) =>
           if (prev != null && prev._1 == s) prev else (s, load()))._2
     }
   }
 
   /** Query a [[buildIvfIndex]] index: per query, probe the `nprobe`
-    * nearest cells. The probed cell set is collected to the driver
-    * (≤ queries×nprobe ints — the same model-params budget as the
-    * centroids themselves) and re-enters the plan as an `isin` literal
-    * so the parquet scan prunes at PARTITION level: unprobed cells are
-    * never read from storage (plan-asserted in IvfIndexSpec). */
+    * nearest cells and return the lazy per-query top-k (query_id, id,
+    * cosine, rank). The query side is collected once
+    * ([[collectProbes]]); the probed cells re-enter the plan as an `isin`
+    * literal so the parquet scan prunes at PARTITION level: unprobed
+    * cells are never read from storage (plan-asserted in IvfIndexSpec).
+    * The store is read through the schema cached with the centroids, so
+    * a steady-state probe runs 3 Spark jobs — the broadcast of the query
+    * rows, the scan's map stage below the top-k's one exchange, and the
+    * result stage — plus one to collect a query source that is not a
+    * local relation. */
   def queryIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
       nprobe: Int = 8): DataFrame = {
-    import graft.functions.HashFunctions.nearestCentroids
     require(nprobe >= 1, s"nprobe must be >= 1 (got $nprobe)")
     graft.sources.FsSwap.requireCommitted(
       new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sessionState.newHadoopConf()),
       new org.apache.hadoop.fs.Path(path), "queryIvfIndex")
-    val cents = loadCentroids(spark, path)
-    // materialize the expanded query frame ONCE before the driver-side
-    // cell collect: without it the plan runs twice (once for the collect,
-    // once inside the join), and a non-deterministic query source could
-    // even probe cells inconsistent with the cells it later joins on.
-    // LAZY (r18): the cell collect below is the first action, so it is
-    // the job that materializes the checkpoint — eager=true ran a
-    // separate materialization job first, pure per-query fixed cost
-    // (the once-materialized guarantee is identical either way)
-    val q = graft.Materialize.once(
+    val (q, probeCells) = collectProbes(spark,
       queries.select(col(qidCol).as("query_id"), col(qvecCol).as("qv"),
-        norm(col(qvecCol)).as("nq"))
-        .withColumn("cell", explode(nearestCentroids(col("qv"), cents, nprobe))))
-    val probeCells: Array[Int] =
-      q.select("cell").distinct().collect().map(_.getInt(0))
-    val idx = spark.read.parquet(s"$path/vectors")
+        norm(col(qvecCol)).as("nq")),
+      loadCentroids(spark, path), nprobe)
+    val idx = readStore(spark, path)
       .filter(col("cell").isin(probeCells.map(Integer.valueOf): _*))
     cellCosineTopK(idx, q, k, dedupPairs = false)
+  }
+
+  /** Query side of a persisted-index probe, shared with
+    * [[Pq.queryIvfPqIndex]]: `q` (with its vector in `qv`) gains each
+    * row's `nprobe` nearest cells and is collected ONCE. The collected
+    * rows are the query source's one evaluation, so the cells the scan
+    * prunes to and the rows the join probes with cannot disagree, even
+    * for a non-deterministic source. They re-enter the plan as a local
+    * relation exploded to one row per (query, cell), `q`'s columns then
+    * `cell`; a query with a null or non-finite vector probes nothing.
+    * Returns that frame and the distinct probed cells. Over a local
+    * source (`createDataFrame`) Spark evaluates the projection on the
+    * driver and the collect runs no job. The queries are broadcast in
+    * full anyway, so holding them on the driver adds no memory budget. */
+  private[operators] def collectProbes(spark: org.apache.spark.sql.SparkSession,
+      q: DataFrame, cents: Array[Array[Double]], nprobe: Int): (DataFrame, Array[Int]) = {
+    import graft.functions.HashFunctions.nearestCentroids
+    val withCells = q.withColumn("__cells", nearestCentroids(col("qv"), cents, nprobe))
+    val rows = withCells.collect()
+    val at = withCells.schema.fieldIndex("__cells")
+    val cells = rows.filterNot(_.isNullAt(at)).flatMap(_.getSeq[Int](at)).distinct
+    val probes = spark.createDataFrame(java.util.Arrays.asList(rows: _*), withCells.schema)
+      .withColumn("cell", explode(col("__cells"))).drop("__cells")
+    (probes, cells)
   }
 
   /** Append a batch of vectors to a COMMITTED [[buildIvfIndex]] index
@@ -571,10 +627,7 @@ object Similarity {
       .getFileSystem(spark.sessionState.newHadoopConf())
     graft.sources.FsSwap.requireCommitted(
       hfs, new org.apache.hadoop.fs.Path(path), "shouldRebuildIvfIndex")
-    val dataDir =
-      if (hfs.exists(new org.apache.hadoop.fs.Path(s"$path/vectors"))) "vectors"
-      else "codes"
-    val cur = spark.read.parquet(s"$path/$dataDir")
+    val cur = readStore(spark, path)
       .groupBy("cell").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val curTotal = cur.values.sum

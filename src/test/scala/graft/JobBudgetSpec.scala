@@ -4,15 +4,20 @@ import java.util.UUID
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.meta.Introspect
-import graft.operators.{AddRowIndex, Pipeline, PipelineConfig, RemoveNullColumns, SortOps}
+import graft.operators.{AddRowIndex, Pipeline, PipelineConfig, RemoveNullColumns, Similarity,
+  SortOps}
 import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.col
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Spark jobs per viewer action on a cached frame. The bounds track the
-  * shared stats pass, the sorts' reuse of the piped frame and the one-job
-  * shape; they are never loosened to make a test pass. */
-class JobBudgetSpec extends AnyFunSuite {
+/** Spark jobs per viewer action on a cached frame, and per IVF index
+  * probe. The bounds track the shared stats pass, the sorts' reuse of the
+  * piped frame, the one-job shape and the collect-once probe; they are
+  * never loosened to make a test pass. */
+class JobBudgetSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -108,5 +113,29 @@ class JobBudgetSpec extends AnyFunSuite {
       c.release()
       df.unpersist()
     }
+  }
+
+  test("a steady-state local single-query IVF probe takes at most 3 jobs") {
+    val p = java.nio.file.Files.createTempDirectory("graft_job_budget_ivf").toFile.getAbsolutePath
+    val corpus = (0 until 200).map { i =>
+      (i.toLong, (0 until 8).map(d => ((i * 31 + d * 7) % 13 - 6).toFloat))
+    }.toDF("vec_id", "embedding")
+    Similarity.buildIvfIndex(corpus, "vec_id", "embedding", p, numCentroids = 4)
+    val q = Seq((-1L, (0 until 8).map(_.toFloat))).toDF("vec_id", "embedding")
+    def probe() = Similarity.queryIvfIndex(spark, p, q, "vec_id", "embedding", k = 5,
+      nprobe = 2).collect()
+    assert(probe().length == 5)
+    // the query rows' broadcast, the scan's map stage, the result stage
+    val (rows, jobs) = jobsOf(probe())
+    assert(rows.length == 5 && jobs <= 3, s"$jobs jobs")
+  }
+
+  test("topKPerKey over an unshuffled scored frame takes exactly one exchange") {
+    val scored = spark.range(400).select((col("id") % 8).as("query_id"), col("id"),
+      (col("id") % 13).cast("double").as("cosine"))
+    val top = Similarity.topKPerKey(scored, Seq("query_id"), col("cosine").desc, 5)
+    val plan = top.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 1, plan)
+    assert(top.count() == 40)
   }
 }
