@@ -586,7 +586,6 @@ object Pq {
     // with more cells keeps the scanned fraction (and recall) instead
     // of silently shrinking the probe
     val nprobe0 = if (nprobe == Auto) resolveNprobe(cents.length) else nprobe
-    // the query side is collected once, as in Similarity.queryIvfIndex
     val (q, probeCells) = Similarity.collectProbes(spark,
       lutQueries(queries, qidCol, qvecCol, model), cents, nprobe0)
     val codes = Similarity.readStore(spark, path)
