@@ -496,11 +496,10 @@ object Pq {
       cb.zipWithIndex.map { case (c, j) => (mi, j, c.toSeq) }
     }.toSeq.toDF("subspace", "centroid", "coords")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebooks")
-    encode(corpus, idCol, vecCol, model, keepVec = true)
+    Similarity.writeCellStore(encode(corpus, idCol, vecCol, model, keepVec = true)
       .withColumn("cell", element_at(nearestCentroids(col("v"), cents, 1), 1))
       .filter(col("cell").isNotNull) // non-finite vectors are unindexable
-      .drop("v")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
+      .drop("v"), s"$path/codes")
     // as-built occupancy snapshot for [[Similarity.shouldRebuildIvfIndex]]
     // (footer-count scan; written before the marker like every part)
     corpus.sparkSession.read.parquet(s"$path/codes").groupBy("cell")
@@ -586,11 +585,12 @@ object Pq {
     // with more cells keeps the scanned fraction (and recall) instead
     // of silently shrinking the probe
     val nprobe0 = if (nprobe == Auto) resolveNprobe(cents.length) else nprobe
-    val (q, probeCells) = Similarity.collectProbes(spark,
+    val probes = Similarity.collectProbes(spark,
       lutQueries(queries, qidCol, qvecCol, model), cents, nprobe0)
     val codes = Similarity.readStore(spark, path)
-      .filter(col("cell").isin(probeCells.map(Integer.valueOf): _*))
-    val scored = adcScored(codes.join(broadcast(q), Seq("cell")), model, excludeSelf)
+      .filter(col("cell").isin(probes.cells.map(Integer.valueOf): _*))
+    val scored = adcScored(codes.join(broadcast(probes.frame), Seq("cell")), model,
+      excludeSelf)
     rerankWith match {
       case None =>
         Similarity.topKPerKey(

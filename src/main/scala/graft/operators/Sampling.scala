@@ -63,25 +63,21 @@ object Sampling {
     * rows; a different `salt` is an independent draw. Groups smaller
     * than k keep everything.
     *
-    * Shape: a partial-then-final top-k — rank within (group, partition)
-    * first, so at most k rows per partition per group reach the
-    * exchange; the md5
-    * priority is uniform, so group skew collapses at the map side. */
+    * Shape: one `row_number() <= k` window per group, the
+    * [[Similarity.topKPerKey]] shape: Spark plans a partial limit below
+    * the group's one hash exchange, so at most k rows per partition per
+    * group cross it, and the md5 priority is uniform, so group skew
+    * collapses at the map side. */
   def samplePerGroup(df: DataFrame, groupCol: String, idCol: String, k: Int,
       salt: String = "#kpg"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1, s"k must be >= 1 (got $k)")
-    val tagged = df.withColumn("__pr",
-      md5(concat(col(idCol).cast("string"), lit(salt))))
-    val localW = Window.partitionBy(col(groupCol), spark_partition_id())
-      .orderBy(col("__pr"), col(idCol))
-    val globalW = Window.partitionBy(col(groupCol))
-      .orderBy(col("__pr"), col(idCol))
-    tagged
-      .withColumn("__lr", row_number().over(localW))
-      .filter(col("__lr") <= k).drop("__lr")
-      .withColumn("rank", row_number().over(globalW).cast("long"))
+    val w = Window.partitionBy(col(groupCol)).orderBy(col("__pr"), col(idCol))
+    df.withColumn("__pr", md5(concat(col(idCol).cast("string"), lit(salt))))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
+      // cast after the filter: Spark infers the partial limit only from
+      // a filter on the bare row_number()
+      .withColumn("rank", col("rank").cast("long"))
       .drop("__pr")
   }
 
@@ -102,11 +98,12 @@ object Sampling {
     * cross-engine policy; ln() is transcendental, so exact keys can
     * differ in the last ulp between engines.
     *
-    * Shape: map-side key computation + the partial-then-final global
-    * top-k (≤ k rows per partition reach the exchange). */
+    * Shape: map-side key computation, then the keyless
+    * [[Similarity.topKPerKey]] shape: an explicit `orderBy(…).limit(k)`
+    * plans a `TakeOrderedAndProject`, so ≤ k rows per partition reach
+    * its single partition, where the rank is taken. */
   def weightedSample(df: DataFrame, idCol: String, weightCol: String, k: Int,
       salt: String = "#ws", rankRoundDp: Int = -1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1, s"k must be >= 1 (got $k)")
     val u = (fineBucket(concat(col(idCol).cast("string"), lit(salt)))
       .cast("double") + lit(0.5)) / lit(MixBuckets.toDouble)
@@ -119,15 +116,10 @@ object Sampling {
       .withColumn("es_key", log(u) / col(weightCol).cast("double"))
     val rankKey = if (rankRoundDp >= 0) round(col("es_key"), rankRoundDp)
                   else col("es_key")
-    val localW = Window.partitionBy(spark_partition_id())
-      .orderBy(rankKey.desc, col(idCol))
-    val globalW = Window.partitionBy()
-      .orderBy(rankKey.desc, col(idCol))
-    keyed
-      .withColumn("__lr", row_number().over(localW))
-      .filter(col("__lr") <= k).drop("__lr")
-      .withColumn("rank", row_number().over(globalW).cast("long"))
-      .filter(col("rank") <= k)
+    val order = Seq(rankKey.desc, col(idCol))
+    keyed.orderBy(order: _*).limit(k)
+      .withColumn("rank", row_number().over(Window.partitionBy().orderBy(order: _*))
+        .cast("long"))
   }
 
   /** Min-id connected components over an undirected edge set: for every

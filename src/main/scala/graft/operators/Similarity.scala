@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Materialize
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -334,9 +334,12 @@ object Similarity {
     * re-assigns per query batch).
     *
     * Layout: `path/vectors/cell=N/…` plus `path/_centroids` (cell →
-    * centroid array). At 100 TB the vectors write is one shuffle-free
-    * map pass (assignment is a map-side native expression against
-    * broadcast centroids); the centroid table is model-params-sized.
+    * centroid array). Assignment is a map-side native expression
+    * against the broadcast centroids; the vectors then cross one
+    * REBALANCE exchange on `cell` ([[writeCellStore]]), so each cell is
+    * written as one file rather than one per (write task, cell) and a
+    * probe opens one file per probed cell. The centroid table is
+    * model-params-sized.
     */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
       path: String, numCentroids: Int = 64, seed: Long = 42L,
@@ -353,11 +356,11 @@ object Similarity {
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
-    corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
+    writeCellStore(corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
         norm(col(vecCol)).as("nv"),
         element_at(nearestCentroids(col(vecCol), cents, 1), 1).as("cell"))
-      .filter(col("cell").isNotNull) // non-finite vectors are unindexable
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors")
+      .filter(col("cell").isNotNull), // non-finite vectors are unindexable
+      s"$path/vectors")
     // as-built occupancy snapshot — the drift baseline the rebuild
     // advisor compares live occupancy against (footer-count scan, no
     // vector bytes read). Written before the marker, like every part.
@@ -367,6 +370,17 @@ object Similarity {
     graft.sources.FsSwap.commitArtifact(fs, new org.apache.hadoop.fs.Path(path),
       s"ivf numCentroids=$numCentroids seed=$seed")
   }
+
+  /** Write a build's cell store to `dir`, `partitionBy("cell")` behind
+    * Spark's REBALANCE on `cell`: every row of a cell reaches one write
+    * task, so each `cell=N` directory holds one file. AQE coalesces the
+    * small cells' partitions into shared tasks and splits a cell larger
+    * than its advisory partition size, which then keeps a few files.
+    * Shared by [[buildIvfIndex]] (so [[rebuildIvfIndex]]) and
+    * [[Pq.buildIvfPqIndex]]; appends keep their unshuffled write. */
+  private[operators] def writeCellStore(store: DataFrame, dir: String): Unit =
+    store.hint("rebalance", col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(dir)
 
   /** Reload the `cell → centroid` table written by [[buildIvfIndex]] (or
     * [[Pq.buildIvfPqIndex]] — same layout). Cell ids are dense 0..n-1 by
@@ -449,11 +463,15 @@ object Similarity {
     * ([[collectProbes]]); the probed cells re-enter the plan as an `isin`
     * literal so the parquet scan prunes at PARTITION level: unprobed
     * cells are never read from storage (plan-asserted in IvfIndexSpec).
-    * The store is read through the schema cached with the centroids, so
-    * a steady-state probe runs 3 Spark jobs — the broadcast of the query
-    * rows, the scan's map stage below the top-k's one exchange, and the
-    * result stage — plus one to collect a query source that is not a
-    * local relation. */
+    * The store is read through the schema cached with the centroids.
+    *
+    * Exactly one query row takes a join-free plan
+    * ([[oneQueryCosineTopK]]): a steady-state probe then runs 1 Spark
+    * job, the pruned scan under one keyless top-k. Any other count
+    * joins the broadcast query rows and ranks per `query_id`: 3 jobs —
+    * the broadcast, the scan's map stage below the top-k's one
+    * exchange, and the result stage. Either way a query source that is
+    * not a local relation adds one job to collect it. */
   def queryIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
       nprobe: Int = 8): DataFrame = {
@@ -462,29 +480,56 @@ object Similarity {
       new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sessionState.newHadoopConf()),
       new org.apache.hadoop.fs.Path(path), "queryIvfIndex")
-    val (q, probeCells) = collectProbes(spark,
+    val probes = collectProbes(spark,
       queries.select(col(qidCol).as("query_id"), col(qvecCol).as("qv"),
         norm(col(qvecCol)).as("nq")),
       loadCentroids(spark, path), nprobe)
     val idx = readStore(spark, path)
-      .filter(col("cell").isin(probeCells.map(Integer.valueOf): _*))
-    cellCosineTopK(idx, q, k, dedupPairs = false)
+      .filter(col("cell").isin(probes.cells.map(Integer.valueOf): _*))
+    probes.rows match {
+      case Array(one) => oneQueryCosineTopK(idx, one, k)
+      case _ => cellCosineTopK(idx, probes.frame, k, dedupPairs = false)
+    }
   }
+
+  /** [[cellCosineTopK]] for a single collected query row: its
+    * `query_id`, `qv` and `nq` enter the plan as literals of their
+    * collected types, so the cosines are the join's bit for bit, and
+    * [[topKPerKey]] ranks with no key. No broadcast, no exchange on
+    * `query_id`; same output columns, types and order. */
+  private def oneQueryCosineTopK(c: DataFrame, q: Row, k: Int): DataFrame = {
+    def field(name: String): Column = {
+      val i = q.schema.fieldIndex(name)
+      org.apache.spark.sql.graftbridge.ColumnBridge.column(
+        org.apache.spark.sql.catalyst.expressions.Literal.create(
+          q.get(i), q.schema(i).dataType))
+    }
+    val scored = c.filter(col("id") =!= field("query_id"))
+      .select(field("query_id").as("query_id"), col("id"),
+        (dot(col("v"), field("qv")) / (col("nv") * field("nq"))).as("cosine"))
+    topKPerKey(scored, Seq.empty, col("cosine").desc, k)
+  }
+
+  /** [[collectProbes]]' result: the collected query rows (`q`'s columns
+    * then `__cells`), the same rows as a local relation exploded to one
+    * row per (query, cell), and the distinct probed cells. */
+  private[operators] final case class Probes(rows: Array[Row],
+      frame: DataFrame, cells: Array[Int])
 
   /** Query side of a persisted-index probe, shared with
     * [[Pq.queryIvfPqIndex]]: `q` (with its vector in `qv`) gains each
     * row's `nprobe` nearest cells and is collected ONCE. The collected
     * rows are the query source's one evaluation, so the cells the scan
-    * prunes to and the rows the join probes with cannot disagree, even
+    * prunes to and the rows the probe scores with cannot disagree, even
     * for a non-deterministic source. They re-enter the plan as a local
     * relation exploded to one row per (query, cell), `q`'s columns then
     * `cell`; a query with a null or non-finite vector probes nothing.
-    * Returns that frame and the distinct probed cells. Over a local
-    * source (`createDataFrame`) Spark evaluates the projection on the
-    * driver and the collect runs no job. The queries are broadcast in
-    * full anyway, so holding them on the driver adds no memory budget. */
+    * Over a local source (`createDataFrame`) Spark evaluates the
+    * projection on the driver and the collect runs no job. The queries
+    * are broadcast in full anyway, so holding them on the driver adds
+    * no memory budget. */
   private[operators] def collectProbes(spark: org.apache.spark.sql.SparkSession,
-      q: DataFrame, cents: Array[Array[Double]], nprobe: Int): (DataFrame, Array[Int]) = {
+      q: DataFrame, cents: Array[Array[Double]], nprobe: Int): Probes = {
     import graft.functions.HashFunctions.nearestCentroids
     val withCells = q.withColumn("__cells", nearestCentroids(col("qv"), cents, nprobe))
     val rows = withCells.collect()
@@ -492,7 +537,7 @@ object Similarity {
     val cells = rows.filterNot(_.isNullAt(at)).flatMap(_.getSeq[Int](at)).distinct
     val probes = spark.createDataFrame(java.util.Arrays.asList(rows: _*), withCells.schema)
       .withColumn("cell", explode(col("__cells"))).drop("__cells")
-    (probes, cells)
+    Probes(rows, probes, cells)
   }
 
   /** Append a batch of vectors to a COMMITTED [[buildIvfIndex]] index

@@ -33,6 +33,22 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(cents.count() == 8)
   }
 
+  test("build and rebuild write one file per cell") {
+    val p = Files.createTempDirectory("graft_ivf_layout").toFile.getAbsolutePath
+    def filesPerCell: Map[String, Int] =
+      new java.io.File(s"$p/vectors").listFiles().filter(_.isDirectory)
+        .map(d => d.getName -> d.listFiles().count(_.getName.startsWith("part-"))).toMap
+    // four write tasks, each holding rows of most cells
+    Similarity.buildIvfIndex(synthCorpus(500, 8).repartition(4), "vec_id", "embedding",
+      p, numCentroids = 8, seed = 7L, kmeansIters = 2)
+    val built = filesPerCell
+    assert(built.size > 1 && built.values.forall(_ == 1), built)
+    Similarity.rebuildIvfIndex(spark, p, numCentroids = 8, seed = 7L, kmeansIters = 2)
+    val rebuilt = filesPerCell
+    assert(rebuilt.size > 1 && rebuilt.values.forall(_ == 1), rebuilt)
+    assert(spark.read.parquet(s"$p/vectors").count() == 500)
+  }
+
   test("probe scan prunes at partition level (unprobed cells never read)") {
     val queries = synthCorpus(500, 8).filter($"vec_id" < 2)
     val out = Similarity.queryIvfIndex(spark, indexPath, queries,

@@ -38,6 +38,17 @@ class IvfPqIndexSpec extends AnyFunSuite {
     assert(codeCols == Set("id", "code", "vnorm", "cell"), codeCols.toString)
   }
 
+  test("build writes one codes file per cell") {
+    val p = Files.createTempDirectory("graft_ivfpq_layout").toFile.getAbsolutePath
+    // four write tasks, each holding rows of most cells
+    Pq.buildIvfPqIndex(synthCorpus(500, 8).repartition(4), "vec_id", "embedding",
+      p, numCentroids = 8, m = 4, k = 16, seed = 7L, kmeansIters = 2)
+    val files = new java.io.File(s"$p/codes").listFiles().filter(_.isDirectory)
+      .map(d => d.getName -> d.listFiles().count(_.getName.startsWith("part-"))).toMap
+    assert(files.size > 1 && files.values.forall(_ == 1), files)
+    assert(spark.read.parquet(s"$p/codes").count() == 500)
+  }
+
   test("probe scan prunes the codes read at partition level") {
     val queries = synthCorpus(500, 8).filter($"vec_id" < 2)
     val out = Pq.queryIvfPqIndex(spark, indexPath, queries,

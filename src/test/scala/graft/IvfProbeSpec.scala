@@ -7,7 +7,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -93,12 +95,26 @@ class IvfProbeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(assertSameProbe(indexPath, synthCorpus(500, 8).filter(lit(false)), 5, 2).isEmpty)
     // nprobe past the cell count probes every cell
     assert(assertSameProbe(indexPath, local, 10, 20).size == 10)
+    // one query row from a source that is not local, and a null one
+    val one = synthCorpus(500, 8).filter($"vec_id" === 7).repartition(3)
+    assert(assertSameProbe(indexPath, one, 10, 2).size == 10)
+    assert(assertSameProbe(indexPath, one, 10, 20).size == 10)
+    val nullVec = Seq((-2L, Option.empty[Seq[Float]])).toDF("vec_id", "embedding")
+    assert(assertSameProbe(indexPath, nullVec, 5, 2).isEmpty)
   }
 
   test("queryIvfIndex excludes a query id present in the index") {
     val self = synthCorpus(500, 8).filter($"vec_id" === 10)
     val rows = assertSameProbe(indexPath, self, 10, 2)
     assert(rows.size == 10 && !rows.exists(_.getAs[Long]("id") == 10L))
+  }
+
+  test("a one-row probe plans no join and no exchange") {
+    val one = synthCorpus(500, 8).filter($"vec_id" === 7).repartition(3)
+    val plan = probe(indexPath, one, 10, 2).queryExecution.executedPlan
+    assert(collect(plan) { case e: Exchange => e }.isEmpty, plan)
+    assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
+    assert(collect(plan) { case t: TakeOrderedAndProjectExec => t }.size == 1, plan)
   }
 
   test("topKPerKey equals the two-window top-k, with keys and with none") {

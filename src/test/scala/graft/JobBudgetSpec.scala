@@ -115,19 +115,34 @@ class JobBudgetSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("a steady-state local single-query IVF probe takes at most 3 jobs") {
+  private lazy val ivfIndex = {
     val p = java.nio.file.Files.createTempDirectory("graft_job_budget_ivf").toFile.getAbsolutePath
     val corpus = (0 until 200).map { i =>
       (i.toLong, (0 until 8).map(d => ((i * 31 + d * 7) % 13 - 6).toFloat))
     }.toDF("vec_id", "embedding")
     Similarity.buildIvfIndex(corpus, "vec_id", "embedding", p, numCentroids = 4)
-    val q = Seq((-1L, (0 until 8).map(_.toFloat))).toDF("vec_id", "embedding")
-    def probe() = Similarity.queryIvfIndex(spark, p, q, "vec_id", "embedding", k = 5,
+    p
+  }
+
+  def probe(queries: org.apache.spark.sql.DataFrame) =
+    Similarity.queryIvfIndex(spark, ivfIndex, queries, "vec_id", "embedding", k = 5,
       nprobe = 2).collect()
-    assert(probe().length == 5)
-    // the query rows' broadcast, the scan's map stage, the result stage
-    val (rows, jobs) = jobsOf(probe())
+
+  test("a steady-state local single-query IVF probe takes at most 3 jobs") {
+    val q = Seq((-1L, (0 until 8).map(_.toFloat))).toDF("vec_id", "embedding")
+    assert(probe(q).length == 5)
+    // 3 is the broadcast-join plan's count (the query rows' broadcast,
+    // the scan's map stage, the result stage); one row takes 1, below
+    val (rows, jobs) = jobsOf(probe(q))
     assert(rows.length == 5 && jobs <= 3, s"$jobs jobs")
+  }
+
+  test("a steady-state local single-query IVF probe takes exactly 1 job") {
+    val q = Seq((-2L, (0 until 8).map(d => (d % 3).toFloat))).toDF("vec_id", "embedding")
+    assert(probe(q).length == 5)
+    // the pruned scan under one keyless top-k: no broadcast, no exchange
+    val (rows, jobs) = jobsOf(probe(q))
+    assert(rows.length == 5 && jobs == 1, s"$jobs jobs")
   }
 
   test("topKPerKey over an unshuffled scored frame takes exactly one exchange") {
